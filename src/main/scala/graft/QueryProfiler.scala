@@ -88,9 +88,9 @@ object QueryProfiler {
       // mean × count — indicative, not exact)
       val cgMs = cg.METRIC_COMPILATION_TIME.getSnapshot.getMean *
         cg.METRIC_COMPILATION_TIME.getCount - cgMean0
-      // listener events post asynchronously — give the bus a moment to
-      // drain (listenerBus.waitUntilEmpty is private[spark])
-      Thread.sleep(300)
+      // listener events post asynchronously — drain the bus so the last
+      // job's task ends land in this query's trace
+      org.apache.spark.sql.graftbridge.Bridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(tr)
       val jobs = tr.jobs.values.toSeq
       val jobWall = jobs.map(j => math.max(0L, j.t1 - j.t0)).sum / 1e3

@@ -21,30 +21,31 @@ import graft.ops.Dedup
   * band rows, so candidate generation AND the matching-slot
   * est-Jaccard confirm both run off the index alone.
   *
-  * Refresh mechanics (the [[FingerprintsRefresh]] shape):
-  * [[MergeTable.rowDeltas]] yields changed documents' pre-images (−1)
-  * and post-images (+1) from changed buckets only; post-image texts
-  * re-shingle/re-sign into upserts, pre-image keys with no new
-  * counterpart become deletions (a document rewritten below the
-  * shingle length n contributes zero upserts, so its whole band set
-  * leaves the index — the hardest delete case, exercised by the
-  * scaffold's 'updated:'||lang rewrites). One MERGE commits both.
+  * As a [[KeyedIndex]] (`pk` is unique per document set: one row per
+  * (doc, band)), a document rewritten below the shingle length n
+  * contributes zero upserts, so its whole band set leaves the index —
+  * the hardest delete case, exercised by the scaffold's
+  * 'updated:'||lang rewrites. Signing is CPU-heavy, so the refresh
+  * sizes its width by compute
+  * ([[graft.ops.SizedSession.CpuHeavyRowsPerPartition]]).
   *
   * 100 TB cost: shingling/signing ∝ changed documents' text; the index
   * merge touches only buckets containing affected keys; pair queries
   * join band buckets (sub-quadratic, no crossJoin — `PlanGuardSpec`'s
-  * invariant family). The maintained index is row-identical to a
-  * from-scratch [[build]] at the new version (spec-pinned), and the
-  * registered query's DuckDB oracle recomputes the whole
-  * signature/band/score algebra over the logically-merged corpus —
-  * incremental index == full rebuild cross-engine.
+  * invariant family). The registered query's DuckDB oracle recomputes
+  * the whole signature/band/score algebra over the logically-merged
+  * corpus — incremental index == full rebuild cross-engine.
   */
 object BandsRefresh {
 
   val defaultBands = 8
   val defaultRowsPerBand = 4
 
-  private val Cols = Seq("pk", "doc_id", "band_idx", "band_hash")
+  def apply(
+      textCol: String = "text", n: Int = 3, bands: Int = defaultBands,
+      rowsPerBand: Int = defaultRowsPerBand): KeyedIndex =
+    KeyedIndex(bandsOf(_, textCol, "doc_id", n, bands, rowsPerBand),
+      graft.ops.SizedSession.CpuHeavyRowsPerPartition)
 
   /** Band rows of a document set: shingle → minhash signature → one
     * row per (doc, band) with the band's slot values as the key.
@@ -75,51 +76,6 @@ object BandsRefresh {
       .select(
         concat_ws("|", col("doc_id"), col("band_idx")).as("pk"),
         col("doc_id"), col("band_idx"), col("band_hash"))
-  }
-
-  /** Create the standing band MergeTable from corpus `version`. */
-  def build(
-      spark: SparkSession, corpusDir: String, bandsDir: String,
-      textCol: String = "text", version: Int = -1, nBuckets: Int = 16,
-      n: Int = 3, bands: Int = defaultBands,
-      rowsPerBand: Int = defaultRowsPerBand): Unit = {
-    val docs = MergeTable.read(spark, corpusDir, version)
-    MergeTable.create(spark, bandsDir,
-      bandsOf(docs, textCol, "doc_id", n, bands, rowsPerBand), "pk", nBuckets)
-  }
-
-  /** Advance the band table across a corpus version transition.
-    * Returns the committed band-table version. */
-  def refresh(
-      spark: SparkSession, corpusDir: String, bandsDir: String,
-      fromVersion: Int, toVersion: Int, textCol: String = "text",
-      n: Int = 3, bands: Int = defaultBands,
-      rowsPerBand: Int = defaultRowsPerBand): Int = {
-    // delta-sized shuffles (round-16 ask #1, the PostingsRefresh
-    // treatment): shingling/signing ∝ changed documents, so every
-    // exchange — the per-doc repartition barrier, the anti-join, the
-    // index merge — plans at the transition's metadata row bound in an
-    // ISOLATED session, not at whatever width the caller's session has
-    val s = graft.ops.SizedSession.forDelta(
-      spark, corpusDir, fromVersion, toVersion,
-      // CPU-heavy derive (per-doc hashing scans): size by compute,
-      // not shuffle volume, or the dominant stage under-parallelizes
-      graft.ops.SizedSession.CpuHeavyRowsPerPartition)
-    val deltas = MergeTable.rowDeltas(
-      s, corpusDir, fromVersion, toVersion, "doc_id")
-    val newB = bandsOf(
-      deltas.filter(col("_sign") === 1).drop("_sign"),
-      textCol, "doc_id", n, bands, rowsPerBand)
-    val oldB = bandsOf(
-      deltas.filter(col("_sign") === -1).drop("_sign"),
-      textCol, "doc_id", n, bands, rowsPerBand)
-    val dels = oldB.join(newB.select("pk"), Seq("pk"), "left_anti")
-      .select(Cols.map(col) :+ lit(true).as("_del"): _*)
-    val ups = newB.select(Cols.map(col) :+ lit(false).as("_del"): _*)
-    // pk is unique per side by construction (one row per (doc, band))
-    // and the delete side is anti-joined against the upsert side
-    MergeTable.merge(s, bandsDir, ups.unionByName(dels), "pk",
-      deleteCol = Some("_del"), validate = false)
   }
 
   /** Matching-slot counts between two band-hash columns of the SAME

@@ -1,84 +1,30 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Winnow
 
-/** Incremental maintenance of a standing winnowed passage-fingerprint
-  * index ([[Winnow.fingerprintsScan]]) over a [[MergeTable]] corpus —
-  * the passage-dedup sibling of [[PostingsRefresh]] (BM25 postings)
-  * and [[IndexRefresh]] (vectors): after a corpus merge, re-fingerprint
-  * ONLY the changed documents and merge the (doc, fp) rows into the
-  * index table, instead of re-winnowing the whole corpus.
+/** The standing winnowed passage-fingerprint index
+  * ([[Winnow.fingerprintsScan]]) over a [[MergeTable]] corpus as a
+  * [[KeyedIndex]] — the passage-dedup sibling of [[PostingsRefresh]].
+  * Rows `(pk = doc_id|fp, doc_id, fp)`; `pk` is unique per document set
+  * because the scan emits a distinct fp set per document. A document
+  * rewritten below the k+w−1 fingerprintable length contributes zero
+  * upserts, so its pre-image rows all delete.
   *
-  * Mechanics: [[MergeTable.rowDeltas]] yields changed documents'
-  * pre-images (−1) and post-images (+1) from changed buckets only.
-  * Post-image texts re-winnow into the new (doc, fp) rows (upserts);
-  * pre-image texts re-winnow into the OLD rows, and those whose
-  * (doc, fp) key has no new counterpart become deletions — a rewritten
-  * document's vanished passages and a deleted document's whole
-  * fingerprint set leave the index exactly. A document rewritten below
-  * the k+w−1 fingerprintable length contributes zero upserts, so its
-  * pre-image rows all delete. Both sides merge in one call, keyed by
-  * the composite `doc_id|fp`.
-  *
-  * 100 TB cost: hashing ∝ changed documents' text (the scan-local O(L)
-  * rolling hash — no per-character shuffle); the index merge touches
-  * only buckets containing affected keys. The result is row-identical
-  * to a from-scratch [[build]] at the new version (spec-pinned, and the
-  * registered query's DuckDB oracle re-winnows the logically-merged
-  * corpus from scratch — incremental index == full rebuild
-  * cross-engine). With the standing index fresh, the duplicate-passage
-  * ratio ([[Winnow.dupPassageStats]]'s n_shared/n_fp) is a groupBy over
-  * the index — no corpus rescan at query time.
+  * Hashing is the scan-local O(L) rolling hash (no per-character
+  * shuffle), CPU-heavy enough that the refresh sizes its width by
+  * compute ([[graft.ops.SizedSession.CpuHeavyRowsPerPartition]]). With
+  * the index fresh, the duplicate-passage ratio
+  * ([[Winnow.dupPassageStats]]'s n_shared/n_fp) is a groupBy over the
+  * index — no corpus rescan at query time.
   */
 object FingerprintsRefresh {
 
-  private val Cols = Seq("pk", "doc_id", "fp")
-
-  private def shaped(fps: DataFrame): DataFrame =
-    fps.select(
-      concat_ws("|", col("doc_id"), col("fp")).as("pk"),
-      col("doc_id"), col("fp"))
-
-  /** Create the standing fingerprint MergeTable from corpus `version`. */
-  def build(
-      spark: SparkSession, corpusDir: String, fpDir: String,
-      textCol: String = "text", version: Int = -1, nBuckets: Int = 16,
-      k: Int = 16, w: Int = 8): Unit = {
-    val docs = MergeTable.read(spark, corpusDir, version)
-    MergeTable.create(spark, fpDir,
-      shaped(Winnow.fingerprintsScan(docs, textCol, "doc_id", k, w)),
-      "pk", nBuckets)
-  }
-
-  /** Advance the fingerprint table across a corpus version transition.
-    * Returns the committed fingerprint-table version. */
-  def refresh(
-      spark: SparkSession, corpusDir: String, fpDir: String,
-      fromVersion: Int, toVersion: Int, textCol: String = "text",
-      k: Int = 16, w: Int = 8): Int = {
-    // delta-sized shuffles in an isolated session — see
-    // [[graft.ops.SizedSession]] (round-16 ask #3)
-    val s = graft.ops.SizedSession.forDelta(
-      spark, corpusDir, fromVersion, toVersion,
-      // CPU-heavy derive (per-doc hashing scans): size by compute,
-      // not shuffle volume, or the dominant stage under-parallelizes
+  def apply(textCol: String = "text", k: Int = 16, w: Int = 8): KeyedIndex =
+    KeyedIndex(
+      docs => Winnow.fingerprintsScan(docs, textCol, "doc_id", k, w).select(
+        concat_ws("|", col("doc_id"), col("fp")).as("pk"),
+        col("doc_id"), col("fp")),
       graft.ops.SizedSession.CpuHeavyRowsPerPartition)
-    val deltas = MergeTable.rowDeltas(
-      s, corpusDir, fromVersion, toVersion, "doc_id")
-    val newF = shaped(Winnow.fingerprintsScan(
-      deltas.filter(col("_sign") === 1).drop("_sign"), textCol, "doc_id", k, w))
-    val oldF = shaped(Winnow.fingerprintsScan(
-      deltas.filter(col("_sign") === -1).drop("_sign"), textCol, "doc_id", k, w))
-    val dels = oldF.join(newF.select("pk"), Seq("pk"), "left_anti")
-      .select(Cols.map(col) :+ lit(true).as("_del"): _*)
-    val ups = newF.select(Cols.map(col) :+ lit(false).as("_del"): _*)
-    // pk is unique per side by construction (fingerprintsScan emits a
-    // distinct fp set per document) and the delete side is anti-joined
-    // against the upsert side, so the batch needs no uniqueness pre-check
-    MergeTable.merge(s, fpDir, ups.unionByName(dels), "pk",
-      deleteCol = Some("_del"), validate = false)
-  }
 }

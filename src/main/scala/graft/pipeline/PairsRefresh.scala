@@ -25,12 +25,12 @@ import org.apache.spark.sql.functions._
   *     (its score depends only on its endpoints' band rows, which the
   *     index refresh left byte-identical).
   *
-  * One MERGE commits both sides. The maintained table is row-identical
-  * to [[BandsRefresh.scoredPairs]] over the index at the new version
-  * (spec-pinned in `PairsRefreshSpec`), and the registered query's
-  * DuckDB oracle recomputes the whole signature/band/score algebra
-  * over the logically-merged corpus — maintained pairs == full rebuild
-  * cross-engine.
+  * One [[KeyedIndex.commit]] commits both sides. The maintained table
+  * is row-identical to [[BandsRefresh.scoredPairs]] over the index at
+  * the new version (spec-pinned in `PairsRefreshSpec`), and the
+  * registered query's DuckDB oracle recomputes the whole
+  * signature/band/score algebra over the logically-merged corpus —
+  * maintained pairs == full rebuild cross-engine.
   *
   * 100 TB cost: delete pass ∝ standing pairs; candidate probe ∝
   * changed docs' band rows × their bucket occupancy (the LSH
@@ -63,7 +63,7 @@ object PairsRefresh {
 
   /** Advance the pairs table across the corpus transition `fromVersion
     * → toVersion`. PRECONDITION: `bandsDir` has already been refreshed
-    * to reflect corpus `toVersion` ([[BandsRefresh.refresh]]) — the
+    * to reflect corpus `toVersion` (a [[BandsRefresh]] refresh) — the
     * fresh side scores from that index alone. Returns the committed
     * pairs version. */
   def refresh(
@@ -82,7 +82,7 @@ object PairsRefresh {
 
     // stale: standing pairs touching a changed doc — delete by pk.
     // One pass over the pairs table; deletes of keys the fresh side
-    // re-adds are anti-joined away below, so each batch key is unique.
+    // re-adds are anti-joined away by the commit.
     val standing = MergeTable.read(s, pairsDir).select(Cols.map(col): _*)
     val stale = standing
       .join(changed.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_semi")
@@ -115,15 +115,9 @@ object PairsRefresh {
         .cast("double") / (bands * rowsPerBand)).as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
 
-    val ups = shaped(fresh)
-      .select(Cols.map(col) :+ lit(false).as("_del"): _*)
     // delete rows keep the standing values (schema-aligned with the
     // upsert side); keys the fresh side re-adds are upserts, not
-    // delete+insert pairs — each batch key stays unique
-    val dels = stale
-      .join(ups.select("pk"), Seq("pk"), "left_anti")
-      .select(Cols.map(col) :+ lit(true).as("_del"): _*)
-    MergeTable.merge(s, pairsDir, ups.unionByName(dels), "pk",
-      deleteCol = Some("_del"), validate = false)
+    // delete+insert pairs
+    KeyedIndex.commit(s, pairsDir, shaped(fresh), stale)
   }
 }

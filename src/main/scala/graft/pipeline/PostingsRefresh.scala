@@ -1,78 +1,24 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.TextSearch
 
-/** Incremental maintenance of a standing BM25 postings index
-  * ([[TextSearch.postings]]) over a [[MergeTable]] corpus — the
-  * keyword-retrieval sibling of [[IndexRefresh]] (vector index): after
-  * a corpus merge, re-derive postings ONLY for the changed documents
-  * and merge them into the postings table, instead of re-exploding the
-  * whole corpus.
-  *
-  * Mechanics: [[MergeTable.rowDeltas]] yields changed documents'
-  * pre-images (−1) and post-images (+1) from changed buckets only.
-  * Post-image texts re-tokenize into the new (doc, term, tf, dl) rows
-  * (upserts); pre-image texts re-tokenize into the OLD rows, and those
-  * whose (doc, term) key has no new counterpart become deletions — a
-  * deleted or rewritten document's stale terms leave the index exactly.
-  * Both sides merge into the postings MergeTable in one call, keyed by
-  * the composite `doc_id|term`.
-  *
-  * 100 TB cost: tokenization ∝ changed documents' text; the postings
-  * merge touches only buckets containing affected keys. The result is
-  * row-identical to a from-scratch [[build]] at the new version
-  * (spec-pinned, and the registered query's DuckDB oracle recomputes
-  * postings over the logically-merged corpus). `(N, avgdl)` for BM25
-  * scoring are count/sum aggregates — maintain them with
-  * [[IncrementalStats]] over the same delta feed.
+/** The standing BM25 postings index ([[TextSearch.postings]]) over a
+  * [[MergeTable]] corpus as a [[KeyedIndex]] — the keyword-retrieval
+  * sibling of [[IndexRefresh]] (vector index). Rows
+  * `(pk = doc_id|term, doc_id, dl, term, tf)`; `pk` is unique per
+  * document set because postings group by (doc, term). A deleted or
+  * rewritten document's stale terms leave the index exactly.
+  * `(N, avgdl)` for BM25 scoring are count/sum aggregates — maintain
+  * them with [[IncrementalStats]] over the same delta feed.
   */
 object PostingsRefresh {
 
-  private val Cols = Seq("pk", "doc_id", "dl", "term", "tf")
-
-  private def shaped(p: DataFrame): DataFrame =
-    p.select(
+  def apply(textCol: String = "text"): KeyedIndex =
+    KeyedIndex(docs => TextSearch.postings(docs, textCol).select(
       concat_ws("|", col("doc_id"), col("term")).as("pk"),
       col("doc_id"), col("dl").cast("long").as("dl"),
-      col("term"), col("tf"))
-
-  /** Create the standing postings MergeTable from corpus `version`. */
-  def build(
-      spark: SparkSession, corpusDir: String, postingsDir: String,
-      textCol: String = "text", version: Int = -1, nBuckets: Int = 16): Unit = {
-    val docs = MergeTable.read(spark, corpusDir, version)
-    MergeTable.create(spark, postingsDir,
-      shaped(TextSearch.postings(docs, textCol)), "pk", nBuckets)
-  }
-
-  /** Advance the postings table across a corpus version transition.
-    * Returns the committed postings version. */
-  def refresh(
-      spark: SparkSession, corpusDir: String, postingsDir: String,
-      fromVersion: Int, toVersion: Int, textCol: String = "text"): Int = {
-    // delta-sized shuffles (round-16 ask #3, the pageRank treatment):
-    // every exchange below plans at a width sized by the transition's
-    // metadata row bound, in an ISOLATED session so the caller's conf
-    // is untouched — a micro-commit refresh stops scheduling ~1,000
-    // session-width tasks
-    val s = graft.ops.SizedSession.forDelta(
-      spark, corpusDir, fromVersion, toVersion)
-    val deltas = MergeTable.rowDeltas(
-      s, corpusDir, fromVersion, toVersion, "doc_id")
-    val newP = shaped(TextSearch.postings(
-      deltas.filter(col("_sign") === 1).drop("_sign"), textCol))
-    val oldP = shaped(TextSearch.postings(
-      deltas.filter(col("_sign") === -1).drop("_sign"), textCol))
-    val dels = oldP.join(newP.select("pk"), Seq("pk"), "left_anti")
-      .select(Cols.map(col) :+ lit(true).as("_del"): _*)
-    val ups = newP.select(Cols.map(col) :+ lit(false).as("_del"): _*)
-    // pk is unique per side by construction (postings groups by
-    // (doc, term)) and the delete side is anti-joined against the
-    // upsert side, so the batch needs no uniqueness pre-check
-    MergeTable.merge(s, postingsDir, ups.unionByName(dels), "pk",
-      deleteCol = Some("_del"), validate = false)
-  }
+      col("term"), col("tf")))
 }

@@ -1,50 +1,26 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.TextSearch
 
-/** Incremental maintenance of the standing character-trigram
-  * substring index ([[TextSearch.trigramPostings]]) over a
-  * [[MergeTable]] corpus — the substring-search sibling of
-  * [[PostingsRefresh]] (token postings) and [[FingerprintsRefresh]]
-  * (winnowed fingerprints): after a corpus merge, re-trigram ONLY the
-  * changed documents and merge the (doc, trigram) rows into the index
-  * table.
-  *
-  * Mechanics mirror [[FingerprintsRefresh]] exactly: post-image texts
-  * re-trigram into upserts; pre-image texts re-trigram into the old
-  * rows, and those with no new counterpart become deletions — a
-  * rewritten document's vanished trigrams and a deleted document's
-  * whole posting set leave the index. Composite key
-  * `doc_id|hex(trigram)` (hex-encoded: a trigram may contain any
-  * character, including the separator).
-  *
-  * 100 TB cost: trigram extraction ∝ changed documents' text
-  * (scan-local); the index merge touches only buckets containing
-  * affected keys. Row-identical to a from-scratch [[build]] at the
-  * new version (spec-pinned); `doc_substring_incremental` proves
-  * search-over-the-maintained-index ≡ a contains scan of the merged
-  * corpus cross-engine.
+/** The standing character-trigram substring index
+  * ([[TextSearch.trigramPostings]]) over a [[MergeTable]] corpus as a
+  * [[KeyedIndex]] — the substring-search sibling of [[PostingsRefresh]]
+  * (token postings) and [[FingerprintsRefresh]] (winnowed
+  * fingerprints). Rows `(pk = doc_id|hex(trigram), doc_id, tg)`: the
+  * trigram is hex-encoded in the key because it may contain any
+  * character, including the separator. `doc_substring_incremental`
+  * proves search-over-the-maintained-index ≡ a contains scan of the
+  * merged corpus cross-engine.
   */
 object TrigramRefresh {
 
-  private val Cols = Seq("pk", "doc_id", "tg")
-
-  private def shaped(postings: DataFrame): DataFrame =
-    postings.select(
+  def apply(textCol: String = "text"): KeyedIndex =
+    KeyedIndex(docs => TextSearch.trigramPostings(docs, textCol).select(
       concat_ws("|", col("doc_id"), hex(encode(col("tg"), "UTF-8"))).as("pk"),
-      col("doc_id"), col("tg"))
-
-  /** Create the standing trigram MergeTable from corpus `version`. */
-  def build(
-      spark: SparkSession, corpusDir: String, tgDir: String,
-      textCol: String = "text", version: Int = -1, nBuckets: Int = 16): Unit = {
-    val docs = MergeTable.read(spark, corpusDir, version)
-    MergeTable.create(spark, tgDir,
-      shaped(TextSearch.trigramPostings(docs, textCol)), "pk", nBuckets)
-  }
+      col("doc_id"), col("tg")))
 
   /** Publish the READ-optimized standing deployment of the maintained
     * index: the current (doc_id, tg) rows re-laid-out bucketed+sorted
@@ -74,27 +50,5 @@ object TrigramRefresh {
     // a REpublish overwrites the path — drop the session's cached file
     // listing or readers keep resolving the previous layout's files
     spark.catalog.refreshTable(table)
-  }
-
-  /** Advance the trigram table across a corpus version transition.
-    * Returns the committed index-table version. */
-  def refresh(
-      spark: SparkSession, corpusDir: String, tgDir: String,
-      fromVersion: Int, toVersion: Int, textCol: String = "text"): Int = {
-    // delta-sized shuffles in an isolated session — see
-    // [[graft.ops.SizedSession]] (round-16 ask #3)
-    val s = graft.ops.SizedSession.forDelta(
-      spark, corpusDir, fromVersion, toVersion)
-    val deltas = MergeTable.rowDeltas(
-      s, corpusDir, fromVersion, toVersion, "doc_id")
-    val newT = shaped(TextSearch.trigramPostings(
-      deltas.filter(col("_sign") === 1).drop("_sign"), textCol))
-    val oldT = shaped(TextSearch.trigramPostings(
-      deltas.filter(col("_sign") === -1).drop("_sign"), textCol))
-    val dels = oldT.join(newT.select("pk"), Seq("pk"), "left_anti")
-      .select(Cols.map(col) :+ lit(true).as("_del"): _*)
-    val ups = newT.select(Cols.map(col) :+ lit(false).as("_del"): _*)
-    MergeTable.merge(s, tgDir, ups.unionByName(dels), "pk",
-      deleteCol = Some("_del"), validate = false)
   }
 }

@@ -350,31 +350,13 @@ object IvmScaffold {
       ()
     }
 
-  /** Standing BM25 postings MergeTable built from [[textCorpus]] v1. */
-  def postingsV1(s: SparkSession, d: String): String = {
-    val corpus = textCorpus(s, d)
-    once(d, "postings") { dir =>
-      graft.pipeline.PostingsRefresh.build(s, corpus, dir, version = 1)
-    }
-  }
-
-  /** Standing winnowed fingerprint MergeTable built from
-    * [[textCorpus]] v1. */
-  def fingerprintsV1(s: SparkSession, d: String): String = {
-    val corpus = textCorpus(s, d)
-    once(d, "fps") { dir =>
-      graft.pipeline.FingerprintsRefresh.build(s, corpus, dir, version = 1)
-    }
-  }
-
-  /** Standing MinHash band-bucket MergeTable built from
-    * [[textCorpus]] v1. */
-  def bandsV1(s: SparkSession, d: String): String = {
-    val corpus = textCorpus(s, d)
-    once(d, "bands") { dir =>
-      graft.pipeline.BandsRefresh.build(s, corpus, dir, version = 1)
-    }
-  }
+  /** Standing [[graft.pipeline.KeyedIndex]] MergeTable built from
+    * `corpus` v1, memoized under `tag` (postings, fingerprints, bands,
+    * trigrams). */
+  def keyedV1(
+      s: SparkSession, d: String, tag: String, corpus: String,
+      index: graft.pipeline.KeyedIndex): String =
+    once(d, tag) { dir => index.build(s, corpus, dir, version = 1) }
 
   /** The MICRO-DELTA text corpus: the [[textCorpus]] shape at ~1%
     * churn (doc_id % 97 instead of % 10) — the transition profile an
@@ -401,20 +383,13 @@ object IvmScaffold {
       ()
     }
 
-  /** Band index over [[textMicroCorpus]] v1. */
-  def bandsMicroV1(s: SparkSession, d: String): String = {
-    val corpus = textMicroCorpus(s, d)
-    once(d, "bandsmicro") { dir =>
-      graft.pipeline.BandsRefresh.build(s, corpus, dir, version = 1)
-    }
-  }
-
   /** Standing SCORED near-dup pairs ([[graft.pipeline.PairsRefresh]])
-    * built from the [[bandsMicroV1]] index PINNED at version 1 — the
-    * shared band index advances to corpus v2 inside the pairs query,
-    * so the build must name the version it reflects. */
+    * built from the band index over [[textMicroCorpus]] PINNED at
+    * version 1 — the shared band index advances to corpus v2 inside
+    * the pairs query, so the build must name the version it reflects. */
   def pairsV1(s: SparkSession, d: String): String = {
-    val bands = bandsMicroV1(s, d)
+    val bands = keyedV1(s, d, "bandsmicro", textMicroCorpus(s, d),
+      graft.pipeline.BandsRefresh())
     once(d, "pairs") { dir =>
       graft.pipeline.PairsRefresh.build(
         s, bands, dir, threshold = 0.2, bandsVersion = 1)
@@ -481,28 +456,21 @@ object IvmScaffold {
         version = 1)
     }
 
-  /** Standing trigram substring index ([[graft.pipeline.TrigramRefresh]])
-    * built from [[textCorpus]] v1. */
-  def trigramsV1(s: SparkSession, d: String): String = {
-    val corpus = textCorpus(s, d)
-    once(d, "trigrams") { dir =>
-      graft.pipeline.TrigramRefresh.build(s, corpus, dir, version = 1)
-    }
-  }
-
-  /** The published READ-optimized substring index: [[trigramsV1]]
-    * advanced to corpus v2 (idempotent — `doc_substring_incremental`
-    * replays the same delta batch), then re-laid-out bucketed+sorted
-    * by TRIGRAM via [[graft.pipeline.TrigramRefresh.publish]] so
-    * `tg IN (...)` searches bucket-prune. Returns the catalog table
-    * name (session-registered, data in the pid-scoped root). */
+  /** The published READ-optimized substring index: the trigram
+    * [[keyedV1]] index advanced to corpus v2 (idempotent —
+    * `doc_substring_incremental` replays the same delta batch), then
+    * re-laid-out bucketed+sorted by TRIGRAM via
+    * [[graft.pipeline.TrigramRefresh.publish]] so `tg IN (...)`
+    * searches bucket-prune. Returns the catalog table name
+    * (session-registered, data in the pid-scoped root). */
   def trigramsPublished(s: SparkSession, d: String): String = {
     val corpus = textCorpus(s, d)
-    val idx = trigramsV1(s, d)
+    val tg = graft.pipeline.TrigramRefresh()
+    val idx = keyedV1(s, d, "trigrams", corpus, tg)
     val table = "graft_tg_pub_" + java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
     once(d, "tgpub") { dir =>
-      graft.pipeline.TrigramRefresh.refresh(s, corpus, idx, 1, 2)
+      tg.refresh(s, corpus, idx, 1, 2)
       graft.pipeline.TrigramRefresh.publish(s, idx, table, dir)
     }
     table
@@ -629,9 +597,12 @@ object IvmScaffold {
     Seq(
       "stats_corpus" -> (() => statsCorpus(s, d)),
       "text_corpus" -> (() => textCorpus(s, d)),
-      "postings_v1" -> (() => postingsV1(s, d)),
-      "fingerprints_v1" -> (() => fingerprintsV1(s, d)),
-      "bands_v1" -> (() => bandsV1(s, d)),
+      "postings_v1" -> (() => keyedV1(s, d, "postings", textCorpus(s, d),
+        graft.pipeline.PostingsRefresh())),
+      "fingerprints_v1" -> (() => keyedV1(s, d, "fps", textCorpus(s, d),
+        graft.pipeline.FingerprintsRefresh())),
+      "bands_v1" -> (() => keyedV1(s, d, "bands", textCorpus(s, d),
+        graft.pipeline.BandsRefresh())),
       "pairs_v1" -> (() => pairsV1(s, d)),
       "stats_view1" -> (() => statsView1(s, d)),
       "clf_views1" -> (() => { classifierF1(s, d); classifierP1(s, d) }),

@@ -2127,8 +2127,9 @@ object PipelineQueries {
     * maintained-index search ≡ scan, cross-engine, deletes included. */
   private val docSubstringIncremental: Q = (s, d) => {
     val corpus = IvmScaffold.textCorpus(s, d)
-    val idx = IvmScaffold.trigramsV1(s, d)
-    graft.pipeline.TrigramRefresh.refresh(s, corpus, idx, 1, 2)
+    val tg = graft.pipeline.TrigramRefresh()
+    val idx = IvmScaffold.keyedV1(s, d, "trigrams", corpus, tg)
+    tg.refresh(s, corpus, idx, 1, 2)
     val postings = graft.pipeline.MergeTable.read(s, idx).select("doc_id", "tg")
     val docs2 = graft.pipeline.MergeTable.read(s, corpus, 2)
     Seq("freshly injected", "updated:", "merge slow").map { p =>
@@ -3956,8 +3957,9 @@ object PipelineQueries {
     * content-idempotent, so the measured body is the refresh. */
   private val docPostingsIncremental: Q = (s, d) => {
     val corpus = IvmScaffold.textCorpus(s, d)
-    val postings = IvmScaffold.postingsV1(s, d)
-    graft.pipeline.PostingsRefresh.refresh(s, corpus, postings, 1, 2)
+    val keyed = graft.pipeline.PostingsRefresh()
+    val postings = IvmScaffold.keyedV1(s, d, "postings", corpus, keyed)
+    keyed.refresh(s, corpus, postings, 1, 2)
     graft.pipeline.MergeTable.read(s, postings)
       .select(col("doc_id"), col("dl"), col("term"), col("tf"))
       .orderBy("doc_id", "term")
@@ -3997,8 +3999,9 @@ object PipelineQueries {
     * content-idempotent, so the measured body is the refresh. */
   private val docFingerprintsIncremental: Q = (s, d) => {
     val corpus = IvmScaffold.textCorpus(s, d)
-    val index = IvmScaffold.fingerprintsV1(s, d)
-    graft.pipeline.FingerprintsRefresh.refresh(s, corpus, index, 1, 2)
+    val keyed = graft.pipeline.FingerprintsRefresh()
+    val index = IvmScaffold.keyedV1(s, d, "fps", corpus, keyed)
+    keyed.refresh(s, corpus, index, 1, 2)
     graft.pipeline.MergeTable.read(s, index)
       .select(col("doc_id"), col("fp"))
       .orderBy("doc_id", "fp")
@@ -4046,8 +4049,9 @@ object PipelineQueries {
     * body is the refresh + the index-only pair query. */
   private val docNeardupIncremental: Q = (s, d) => {
     val corpus = IvmScaffold.textCorpus(s, d)
-    val index = IvmScaffold.bandsV1(s, d)
-    graft.pipeline.BandsRefresh.refresh(s, corpus, index, 1, 2)
+    val keyed = graft.pipeline.BandsRefresh()
+    val index = IvmScaffold.keyedV1(s, d, "bands", corpus, keyed)
+    keyed.refresh(s, corpus, index, 1, 2)
     graft.pipeline.BandsRefresh.scoredPairs(s, index, threshold = 0.2)
       .orderBy("id_a", "id_b")
   }
@@ -4068,9 +4072,10 @@ object PipelineQueries {
     * rebuild cross-engine, deletes/rewrites/inserted clones included. */
   private val docNeardupPairsIncremental: Q = (s, d) => {
     val corpus = IvmScaffold.textMicroCorpus(s, d)
-    val index = IvmScaffold.bandsMicroV1(s, d)
+    val keyed = graft.pipeline.BandsRefresh()
+    val index = IvmScaffold.keyedV1(s, d, "bandsmicro", corpus, keyed)
     val pairs = IvmScaffold.pairsV1(s, d)
-    graft.pipeline.BandsRefresh.refresh(s, corpus, index, 1, 2)
+    keyed.refresh(s, corpus, index, 1, 2)
     graft.pipeline.PairsRefresh.refresh(
       s, corpus, index, pairs, 1, 2, threshold = 0.2)
     graft.pipeline.MergeTable.read(s, pairs)

@@ -3,17 +3,19 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.Path
 
-import graft.pipeline.{FingerprintsRefresh, IncrementalStats, OverlapStats, PostingsRefresh, TrigramRefresh}
+import graft.pipeline.{BandsRefresh, FingerprintsRefresh, IncrementalStats, KeyedIndex, OverlapStats, PostingsRefresh, TrigramRefresh}
 
 /** Standing derived artifacts a streaming corpus keeps fresh — the
   * maintenance side of [[StreamingIngest.startMergeUpsertMaintained]].
-  * Each instance owns one artifact (a stats cell view, a BM25 postings
-  * index, a passage-fingerprint index), remembers the corpus version it
-  * reflects, and advances incrementally when the stream commits a new
-  * one. All three route through the batch IVM family
-  * ([[IncrementalStats]]/[[PostingsRefresh]]/[[FingerprintsRefresh]]),
-  * so streamed maintenance and batch maintenance are the same audited
-  * code path — the streaming layer only supplies the version cursor.
+  * Each instance owns one artifact (a stats cell view, a keyed index, a
+  * model), remembers the corpus version it reflects, and advances
+  * incrementally when the stream commits a new one. Every view routes
+  * through its batch IVM family — [[KeyedIndex]] for the keyed indexes
+  * (postings, fingerprints, trigrams, bands), the bucketed-cell views
+  * ([[IncrementalStats]], [[graft.pipeline.BucketedView]], …) for the
+  * frozen cell artifacts — so streamed maintenance and batch
+  * maintenance are the same audited code path; the streaming layer
+  * only supplies the version cursor.
   *
   * Crash contract shared by all: the version cursor is persisted AFTER
   * the artifact write, so a crash in between leaves the cursor behind
@@ -150,6 +152,37 @@ object CorpusViews {
       .foreach(p => f.delete(p, false))
   }
 
+  /** Shared shape of the artifacts whose cursor is a `_corpus_v<N>`
+    * marker inside `indexDir`: [[step]] builds (`from = None`) or
+    * refreshes the artifact, then the cursor advances. */
+  sealed trait CursorIndex extends Maintained {
+    def indexDir: String
+
+    protected def step(
+        spark: SparkSession, corpusDir: String, from: Option[Int], to: Int): Unit
+
+    final def version(spark: SparkSession): Option[Int] = readCursor(spark, indexDir)
+
+    protected final def doAdvance(
+        spark: SparkSession, corpusDir: String, from: Option[Int], to: Int): Unit = {
+      step(spark, corpusDir, from, to)
+      writeCursor(spark, indexDir, to)
+    }
+  }
+
+  /** A [[CursorIndex]] over a [[KeyedIndex]] at `indexDir`, built from
+    * the corpus on first advance. */
+  sealed trait KeyedView extends CursorIndex {
+    protected def keyed: KeyedIndex
+
+    protected def step(
+        spark: SparkSession, corpusDir: String, from: Option[Int], to: Int): Unit =
+      from match {
+        case None => keyed.build(spark, corpusDir, indexDir, version = to)
+        case Some(p) => keyed.refresh(spark, corpusDir, indexDir, p, to)
+      }
+  }
+
   /** Shared shape of the frozen-cell-parquet artifacts ([[StatsView]],
     * [[QuantileView]]): one `viewDir/v<N>` directory per reflected
     * corpus version, cursor = the newest complete (`_SUCCESS`-bearing)
@@ -211,23 +244,10 @@ object CorpusViews {
     }
   }
 
-  /** Standing BM25 postings index ([[PostingsRefresh]]) at `indexDir`,
-    * built from the corpus on first advance. */
+  /** Standing BM25 postings index ([[PostingsRefresh]]) at `indexDir`. */
   final case class PostingsIndex(
-      indexDir: String, textCol: String = "text") extends Maintained {
-
-    def version(spark: SparkSession): Option[Int] = readCursor(spark, indexDir)
-
-    protected def doAdvance(
-        spark: SparkSession, corpusDir: String, from: Option[Int], to: Int): Unit = {
-      from match {
-        case None =>
-          PostingsRefresh.build(spark, corpusDir, indexDir, textCol, version = to)
-        case Some(p) =>
-          PostingsRefresh.refresh(spark, corpusDir, indexDir, p, to, textCol)
-      }
-      writeCursor(spark, indexDir, to)
-    }
+      indexDir: String, textCol: String = "text") extends KeyedView {
+    protected def keyed: KeyedIndex = PostingsRefresh(textCol)
   }
 
   /** Per-`groupCol` quantile-sketch cell view
@@ -445,23 +465,15 @@ object CorpusViews {
     * (`TrigramPublishSpec` pins it). */
   final case class TrigramIndex(
       indexDir: String, textCol: String = "text",
-      publish: Option[TrigramPublishPolicy] = None) extends Maintained {
+      publish: Option[TrigramPublishPolicy] = None) extends KeyedView {
+    protected def keyed: KeyedIndex = TrigramRefresh(textCol)
 
-    def version(spark: SparkSession): Option[Int] = readCursor(spark, indexDir)
-
-    protected def doAdvance(
+    override protected def step(
         spark: SparkSession, corpusDir: String, from: Option[Int], to: Int): Unit = {
-      from match {
-        case None =>
-          TrigramRefresh.build(spark, corpusDir, indexDir, textCol, version = to)
-        case Some(p) =>
-          TrigramRefresh.refresh(spark, corpusDir, indexDir, p, to, textCol)
+      super.step(spark, corpusDir, from, to)
+      publish.filter(to % _.every == 0).foreach { pol =>
+        TrigramRefresh.publish(spark, indexDir, pol.table, pol.path, pol.nBuckets)
       }
-      publish.foreach { pol =>
-        if (to % pol.every == 0)
-          TrigramRefresh.publish(spark, indexDir, pol.table, pol.path, pol.nBuckets)
-      }
-      writeCursor(spark, indexDir, to)
     }
   }
 
@@ -550,12 +562,10 @@ object CorpusViews {
   final case class RagIndex(
       indexDir: String,
       embedder: graft.embed.Embedder = graft.embed.HashingEmbedder())
-    extends Maintained {
+    extends CursorIndex {
 
-    def version(spark: SparkSession): Option[Int] = readCursor(spark, indexDir)
-
-    protected def doAdvance(
-        spark: SparkSession, corpusDir: String, from: Option[Int], to: Int): Unit = {
+    protected def step(
+        spark: SparkSession, corpusDir: String, from: Option[Int], to: Int): Unit =
       from match {
         case None =>
           graft.pipeline.IndexRefresh.build(
@@ -563,8 +573,6 @@ object CorpusViews {
         case Some(p) =>
           graft.pipeline.IndexRefresh.refresh(spark, corpusDir, indexDir, p, to, embedder)
       }
-      writeCursor(spark, indexDir, to)
-    }
   }
 
   /** Standing frozen-centroid IVF cell lists
@@ -582,12 +590,12 @@ object CorpusViews {
       indexPath: String, nlist: Int = 16,
       keyCol: String = "vec_id", embCol: String = "embedding",
       retrainPsi: Double = 0.2)
-    extends Maintained {
+    extends CursorIndex {
 
-    def version(spark: SparkSession): Option[Int] = readCursor(spark, indexPath)
+    def indexDir: String = indexPath
 
-    protected def doAdvance(
-        spark: SparkSession, corpusDir: String, from: Option[Int], to: Int): Unit = {
+    protected def step(
+        spark: SparkSession, corpusDir: String, from: Option[Int], to: Int): Unit =
       from match {
         case None =>
           graft.index.IvfRefresh.build(spark, corpusDir, indexPath,
@@ -603,61 +611,26 @@ object CorpusViews {
                 f"[ivf] occupancy PSI $psi%.3f > $retrainPsi%.3f at v$to — retrained centers")
           }
       }
-      writeCursor(spark, indexPath, to)
-    }
   }
 
   /** Standing MinHash band-bucket near-dup index
-    * ([[graft.pipeline.BandsRefresh]]) at `indexDir` — keeps the
-    * banded-LSH dedup state fresh across the stream so near-dup
-    * queries ([[graft.pipeline.BandsRefresh.scoredPairs]]) and
-    * admission checks
-    * ([[graft.pipeline.BandsRefresh.nearDupsAgainstIndex]]) never
-    * rescan the corpus. */
+    * ([[BandsRefresh]]) at `indexDir` — keeps the banded-LSH dedup
+    * state fresh across the stream so near-dup queries
+    * ([[BandsRefresh.scoredPairs]]) and admission checks
+    * ([[BandsRefresh.nearDupsAgainstIndex]]) never rescan the corpus. */
   final case class BandIndex(
       indexDir: String, textCol: String = "text",
-      n: Int = 3, bands: Int = graft.pipeline.BandsRefresh.defaultBands,
-      rowsPerBand: Int = graft.pipeline.BandsRefresh.defaultRowsPerBand)
-    extends Maintained {
-
-    def version(spark: SparkSession): Option[Int] = readCursor(spark, indexDir)
-
-    protected def doAdvance(
-        spark: SparkSession, corpusDir: String, from: Option[Int], to: Int): Unit = {
-      from match {
-        case None =>
-          graft.pipeline.BandsRefresh.build(
-            spark, corpusDir, indexDir, textCol, version = to,
-            n = n, bands = bands, rowsPerBand = rowsPerBand)
-        case Some(p) =>
-          graft.pipeline.BandsRefresh.refresh(
-            spark, corpusDir, indexDir, p, to, textCol,
-            n = n, bands = bands, rowsPerBand = rowsPerBand)
-      }
-      writeCursor(spark, indexDir, to)
-    }
+      n: Int = 3, bands: Int = BandsRefresh.defaultBands,
+      rowsPerBand: Int = BandsRefresh.defaultRowsPerBand) extends KeyedView {
+    protected def keyed: KeyedIndex = BandsRefresh(textCol, n, bands, rowsPerBand)
   }
 
   /** Standing winnowed passage-fingerprint index
     * ([[FingerprintsRefresh]]) at `indexDir`. */
   final case class FingerprintIndex(
       indexDir: String, textCol: String = "text",
-      k: Int = 16, w: Int = 8) extends Maintained {
-
-    def version(spark: SparkSession): Option[Int] = readCursor(spark, indexDir)
-
-    protected def doAdvance(
-        spark: SparkSession, corpusDir: String, from: Option[Int], to: Int): Unit = {
-      from match {
-        case None =>
-          FingerprintsRefresh.build(
-            spark, corpusDir, indexDir, textCol, version = to, k = k, w = w)
-        case Some(p) =>
-          FingerprintsRefresh.refresh(
-            spark, corpusDir, indexDir, p, to, textCol, k = k, w = w)
-      }
-      writeCursor(spark, indexDir, to)
-    }
+      k: Int = 16, w: Int = 8) extends KeyedView {
+    protected def keyed: KeyedIndex = FingerprintsRefresh(textCol, k, w)
   }
 
   /** Standing per-file Bloom point-lookup sidecar

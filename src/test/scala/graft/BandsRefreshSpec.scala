@@ -41,7 +41,7 @@ class BandsRefreshSpec extends SparkSpec {
   test("refresh equals rebuild across rewrite-below-shingle-length, delete and insert") {
     val (corpus, bands) = freshDirs()
     MergeTable.create(spark, corpus, docs.toDF("doc_id", "text"), "doc_id", nBuckets = 4)
-    BandsRefresh.build(spark, corpus, bands, nBuckets = 4)
+    BandsRefresh().build(spark, corpus, bands, nBuckets = 4)
     assert(indexRows(bands) == rebuildRows(corpus))
     assert(indexRows(bands).map(_._1) == Set(1L, 2L, 3L, 4L, 5L))
 
@@ -55,7 +55,7 @@ class BandsRefreshSpec extends SparkSpec {
       (1L, "fully rewritten content that resembles nothing prior at all", false))
       .toDF("doc_id", "text", "_del"),
       "doc_id", deleteCol = Some("_del"), validate = false)
-    BandsRefresh.refresh(spark, corpus, bands, 1, 2)
+    BandsRefresh().refresh(spark, corpus, bands, 1, 2)
 
     val rows = indexRows(bands)
     assert(rows == rebuildRows(corpus),
@@ -68,12 +68,12 @@ class BandsRefreshSpec extends SparkSpec {
   test("scoredPairs from the maintained index equals minHashPairs over the corpus") {
     val (corpus, bands) = freshDirs()
     MergeTable.create(spark, corpus, docs.toDF("doc_id", "text"), "doc_id", nBuckets = 4)
-    BandsRefresh.build(spark, corpus, bands, nBuckets = 4)
+    BandsRefresh().build(spark, corpus, bands, nBuckets = 4)
     MergeTable.merge(spark, corpus, Seq(
       (6L, "the quick brown fox jumps over the lazy dog tonight", false))
       .toDF("doc_id", "text", "_del"),
       "doc_id", deleteCol = Some("_del"), validate = false)
-    BandsRefresh.refresh(spark, corpus, bands, 1, 2)
+    BandsRefresh().refresh(spark, corpus, bands, 1, 2)
 
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.as[(Long, Long, Double)].collect().toSet
@@ -92,7 +92,7 @@ class BandsRefreshSpec extends SparkSpec {
   test("nearDupsAgainstIndex flags arrivals without corpus access; novel docs pass") {
     val (corpus, bands) = freshDirs()
     MergeTable.create(spark, corpus, docs.toDF("doc_id", "text"), "doc_id", nBuckets = 4)
-    BandsRefresh.build(spark, corpus, bands, nBuckets = 4)
+    BandsRefresh().build(spark, corpus, bands, nBuckets = 4)
 
     val batch = Seq(
       (101L, "the quick brown fox jumps over the lazy dog today"), // dup of 1/5

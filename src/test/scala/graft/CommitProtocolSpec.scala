@@ -34,7 +34,7 @@ class CommitProtocolSpec extends SparkSpec {
     // exactly one of them, loudly
     val gate = new java.util.concurrent.CountDownLatch(2)
     def contend(tag: Long): Future[Try[Int]] = Future {
-      gate.countDown(); gate.await()
+      gate.countDown(); scala.concurrent.blocking { gate.await() }
       Try(MergeTable.merge(spark, dir,
         Seq((tag, -tag)).toDF("id", "v"), "id"))
     }
@@ -237,7 +237,7 @@ class CommitProtocolSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     val gate = new java.util.concurrent.CountDownLatch(8)
     def contender(): Future[Boolean] = Future {
-      gate.countDown(); gate.await()
+      gate.countDown(); scala.concurrent.blocking { gate.await() }
       Try(MergeTable.claimVersion(conf, dir, 2)).isSuccess
     }
     val wins = Await.result(
@@ -268,7 +268,7 @@ class CommitProtocolSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     val gate = new java.util.concurrent.CountDownLatch(8)
     def contender(): Future[Boolean] = Future {
-      gate.countDown(); gate.await()
+      gate.countDown(); scala.concurrent.blocking { gate.await() }
       Try(MergeTable.claimVersion(conf, dir, 2)).isSuccess
     }
     val wins = Await.result(

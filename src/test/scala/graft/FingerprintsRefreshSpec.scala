@@ -42,7 +42,7 @@ class FingerprintsRefreshSpec extends SparkSpec {
       (3L, "a completely different document body here"),
       (4L, "untouched text stays untouched forever")).toDF("doc_id", "text")
     MergeTable.create(spark, corpus, docs, "doc_id", nBuckets = 4)
-    FingerprintsRefresh.build(spark, corpus, index, k = K, w = W)
+    FingerprintsRefresh(k = K, w = W).build(spark, corpus, index)
     assert(rowsOf(MergeTable.read(spark, index)) == rebuilt(corpus))
 
     // rewrite 1 (different passages), delete 2, insert 5,
@@ -53,7 +53,7 @@ class FingerprintsRefreshSpec extends SparkSpec {
       (3L, "tiny", false),
       (5L, "brand new arrival with plenty of characters", false)
     ).toDF("doc_id", "text", "_del"), "doc_id", deleteCol = Some("_del"))
-    FingerprintsRefresh.refresh(spark, corpus, index, 1, 2, k = K, w = W)
+    FingerprintsRefresh(k = K, w = W).refresh(spark, corpus, index, 1, 2)
 
     val got = rowsOf(MergeTable.read(spark, index))
     assert(got == rebuilt(corpus))
@@ -67,7 +67,7 @@ class FingerprintsRefreshSpec extends SparkSpec {
       (3L, "grown back to a fingerprintable length again", false),
       (5L, "", true)
     ).toDF("doc_id", "text", "_del"), "doc_id", deleteCol = Some("_del"))
-    FingerprintsRefresh.refresh(spark, corpus, index, 2, 3, k = K, w = W)
+    FingerprintsRefresh(k = K, w = W).refresh(spark, corpus, index, 2, 3)
     assert(rowsOf(MergeTable.read(spark, index)) == rebuilt(corpus))
   }
 
@@ -78,12 +78,12 @@ class FingerprintsRefreshSpec extends SparkSpec {
       (1L, "alpha beta gamma delta"), (2L, "beta gamma delta epsilon"))
       .toDF("doc_id", "text")
     MergeTable.create(spark, corpus, docs, "doc_id", nBuckets = 2)
-    FingerprintsRefresh.build(spark, corpus, index, k = K, w = W)
+    FingerprintsRefresh(k = K, w = W).build(spark, corpus, index)
     val before = rowsOf(MergeTable.read(spark, index))
     MergeTable.merge(spark, corpus,
       Seq((1L, "alpha beta gamma delta", false)).toDF("doc_id", "text", "_del"),
       "doc_id", deleteCol = Some("_del"))
-    FingerprintsRefresh.refresh(spark, corpus, index, 1, 2, k = K, w = W)
+    FingerprintsRefresh(k = K, w = W).refresh(spark, corpus, index, 1, 2)
     assert(rowsOf(MergeTable.read(spark, index)) == before)
   }
 }

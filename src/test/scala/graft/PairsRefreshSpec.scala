@@ -42,7 +42,7 @@ class PairsRefreshSpec extends SparkSpec {
     val (corpus, bands, pairs) = freshDirs()
     MergeTable.create(spark, corpus, docs.toDF("doc_id", "text"), "doc_id",
       nBuckets = 2)
-    BandsRefresh.build(spark, corpus, bands)
+    BandsRefresh().build(spark, corpus, bands)
     PairsRefresh.build(spark, bands, pairs, threshold)
     assert(tableRows(pairs) == scratchRows(bands), "the v1 build seeds exactly")
     assert(tableRows(pairs).exists { case (a, b, _) => a == 1L && b == 2L },
@@ -58,7 +58,7 @@ class PairsRefreshSpec extends SparkSpec {
         (5L, "", true))
         .toDF("doc_id", "text", "_del"),
       "doc_id", deleteCol = Some("_del"), validate = false)
-    BandsRefresh.refresh(spark, corpus, bands, 1, 2)
+    BandsRefresh().refresh(spark, corpus, bands, 1, 2)
     PairsRefresh.refresh(spark, corpus, bands, pairs, 1, 2, threshold)
     val got2 = tableRows(pairs)
     assert(got2 == scratchRows(bands),
@@ -75,7 +75,7 @@ class PairsRefreshSpec extends SparkSpec {
     MergeTable.merge(spark, corpus,
       Seq((5L, "a completely different body of text with no overlap here"))
         .toDF("doc_id", "text"), "doc_id")
-    BandsRefresh.refresh(spark, corpus, bands, 2, 3)
+    BandsRefresh().refresh(spark, corpus, bands, 2, 3)
     PairsRefresh.refresh(spark, corpus, bands, pairs, 2, 3, threshold)
     val got3 = tableRows(pairs)
     assert(got3 == scratchRows(bands),
@@ -88,7 +88,7 @@ class PairsRefreshSpec extends SparkSpec {
     val (corpus, bands, pairs) = freshDirs()
     MergeTable.create(spark, corpus, docs.toDF("doc_id", "text"), "doc_id",
       nBuckets = 2)
-    BandsRefresh.build(spark, corpus, bands)
+    BandsRefresh().build(spark, corpus, bands)
     PairsRefresh.build(spark, bands, pairs, threshold)
     val before = tableRows(pairs)
     // merge a doc whose content is unchanged: its bucket churns but
@@ -96,7 +96,7 @@ class PairsRefreshSpec extends SparkSpec {
     MergeTable.merge(spark, corpus,
       Seq((3L, "pack my box with five dozen liquor jugs right now"))
         .toDF("doc_id", "text"), "doc_id")
-    BandsRefresh.refresh(spark, corpus, bands, 1, 2)
+    BandsRefresh().refresh(spark, corpus, bands, 1, 2)
     PairsRefresh.refresh(spark, corpus, bands, pairs, 1, 2, threshold)
     assert(tableRows(pairs) == before,
       "an identical rewrite must leave the pair set unchanged")

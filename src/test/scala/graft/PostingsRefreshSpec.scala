@@ -34,7 +34,7 @@ class PostingsRefreshSpec extends SparkSpec {
       (3L, "a completely different document"),
       (4L, "untouched text stays untouched")).toDF("doc_id", "text")
     MergeTable.create(spark, corpus, docs, "doc_id", nBuckets = 4)
-    PostingsRefresh.build(spark, corpus, postings)
+    PostingsRefresh().build(spark, corpus, postings)
     assert(rowsOf(MergeTable.read(spark, postings)) ==
       rowsOf(TextSearch.postings(docs)))
 
@@ -44,7 +44,7 @@ class PostingsRefreshSpec extends SparkSpec {
       (2L, "", true),
       (5L, "brand new arrival", false)).toDF("doc_id", "text", "_del"),
       "doc_id", deleteCol = Some("_del"))
-    PostingsRefresh.refresh(spark, corpus, postings, 1, 2)
+    PostingsRefresh().refresh(spark, corpus, postings, 1, 2)
 
     val got = rowsOf(MergeTable.read(spark, postings))
     val want = rowsOf(TextSearch.postings(MergeTable.read(spark, corpus)))
@@ -62,12 +62,12 @@ class PostingsRefreshSpec extends SparkSpec {
     val postings = freshDir("p2")
     val docs = Seq((1L, "alpha beta"), (2L, "beta gamma")).toDF("doc_id", "text")
     MergeTable.create(spark, corpus, docs, "doc_id", nBuckets = 2)
-    PostingsRefresh.build(spark, corpus, postings)
+    PostingsRefresh().build(spark, corpus, postings)
     val before = rowsOf(MergeTable.read(spark, postings))
     MergeTable.merge(spark, corpus,
       Seq((1L, "alpha beta", false)).toDF("doc_id", "text", "_del"),
       "doc_id", deleteCol = Some("_del"))
-    PostingsRefresh.refresh(spark, corpus, postings, 1, 2)
+    PostingsRefresh().refresh(spark, corpus, postings, 1, 2)
     assert(rowsOf(MergeTable.read(spark, postings)) == before)
   }
 }

@@ -348,11 +348,32 @@ class StreamingSpec extends SparkSpec {
       CorpusViews.PostingsIndex(postings),
       CorpusViews.FingerprintIndex(fps), ragIdx, bandIdx, clfModel, ovView,
       ccView, tgView, fqView, bloomIdx, cardView, profView)
-    def stream() =
-      StreamingIngest.startMergeUpsertMaintained(spark, landing, table,
-        "doc_id", schema, ckpt, maintain, deleteCol = Some("_del"),
-        retainVersions = Some(2))
-        .awaitTermination(60000)
+    // every advance's `[maintain] <View>` stderr line must name the
+    // view's own family, in maintenance order: the CDC benchmark parses
+    // per-view advance times from these labels, so a shared adapter
+    // printing a generic class name would silently break that parse
+    val families = Seq("StatsView", "QuantileView", "PostingsIndex",
+      "FingerprintIndex", "RagIndex", "BandIndex", "ClassifierModel",
+      "OverlapView", "ClustersView", "TrigramIndex", "FreqView",
+      "BloomIndex", "CardView", "ProfileView")
+    def stream(): Unit = {
+      val original = System.err
+      val captured = new java.io.ByteArrayOutputStream
+      System.setErr(new java.io.PrintStream(new java.io.OutputStream {
+        override def write(b: Int): Unit = { original.write(b); captured.write(b) }
+        override def flush(): Unit = original.flush()
+      }, true, "UTF-8"))
+      try
+        StreamingIngest.startMergeUpsertMaintained(spark, landing, table,
+          "doc_id", schema, ckpt, maintain, deleteCol = Some("_del"),
+          retainVersions = Some(2))
+          .awaitTermination(60000)
+      finally System.setErr(original)
+      val labels = captured.toString("UTF-8").linesIterator
+        .filter(_.startsWith("[maintain]")).map(_.split("\\s+")(1)).toSeq
+      assert(labels.distinct == families,
+        s"[maintain] lines must name every view's family in order: $labels")
+    }
 
     def statsNow(): Map[String, (Long, Long)] =
       statsView.latest(spark)

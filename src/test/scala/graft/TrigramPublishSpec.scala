@@ -25,7 +25,7 @@ class TrigramPublishSpec extends SparkSpec {
       (i, s"document body number $i$tail")
     }.toDF("doc_id", "text")
     MergeTable.create(spark, corpus, docs, "doc_id", nBuckets = 4)
-    TrigramRefresh.build(spark, corpus, idx, version = 1)
+    TrigramRefresh().build(spark, corpus, idx, version = 1)
 
     val table = "graft_tg_pub_spec"
     spark.sql(s"DROP TABLE IF EXISTS $table")

@@ -22,7 +22,7 @@ class TrigramRefreshSpec extends SparkSpec {
     MergeTable.create(spark, corpus, Seq(
         (1L, "abcdef"), (2L, "xyz|pipe"), (3L, "to be deleted"), (4L, "ok"))
       .toDF("doc_id", "text"), "doc_id", nBuckets = 4)
-    TrigramRefresh.build(spark, corpus, idx, version = 1)
+    TrigramRefresh().build(spark, corpus, idx, version = 1)
     assert(rows(idx).filter(_._1 == 1L).map(_._2) ==
       Set("abc", "bcd", "cde", "def"))
     assert(rows(idx).contains((2L, "z|p")), "separator chars must index cleanly")
@@ -33,10 +33,10 @@ class TrigramRefreshSpec extends SparkSpec {
         (1L, "cdefgh", false), (3L, "", true), (5L, "brand new", false))
       .toDF("doc_id", "text", "_del"), "doc_id", deleteCol = Some("_del"),
       validate = false)
-    TrigramRefresh.refresh(spark, corpus, idx, 1, 2)
+    TrigramRefresh().refresh(spark, corpus, idx, 1, 2)
 
     val fresh = s"$root/fresh"
-    TrigramRefresh.build(spark, corpus, fresh, version = 2)
+    TrigramRefresh().build(spark, corpus, fresh, version = 2)
     assert(rows(idx) == rows(fresh), "refresh must equal rebuild")
     assert(!rows(idx).exists(_._1 == 3L), "deleted doc's postings must leave")
     assert(rows(idx).filter(_._1 == 1L).map(_._2) ==
