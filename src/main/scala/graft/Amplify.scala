@@ -116,15 +116,7 @@ object Amplify {
     val dst = args.lift(1).getOrElse(
       new java.io.File(sys.props("java.io.tmpdir"), "graft-sf1").toString)
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Graft.staticConfigs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.session()
     try {
       run(spark, src, dst, factor)
       println(s"""{"amplified":"$dst","src":"$src","factor":$factor}""")

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import graft.queries.IvmScaffold
 
@@ -116,18 +115,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Graft.staticConfigs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the engine's standard surface: SQL functions + the lambda-invariant
-    // hoist rule, so the gate exercises what library sessions run
-    Graft.registerAll(spark)
+    // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run to named queries —
+    // the regression gate's fresh-JVM RETRY lane (tools/preflight.sh):
+    // a rotating per-JVM degradation (real CPU growth on a random query
+    // subset, clean on immediate re-measurement) must be adjudicated by
+    // measuring again, not by arguing with one contaminated sample
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).filter(_.nonEmpty)
+    val selected = SparkEntry.select(only.getOrElse(Nil))
+    val cores = Graft.cores
+    val cpus = cores.toString
+    val spark = Graft.session(cores)
     val listener = new TaskMetricsListener
     spark.sparkContext.addSparkListener(listener)
 
@@ -139,8 +137,7 @@ object Bench {
     }
 
     val warmupT0 = System.nanoTime()
-    try Warmup.run(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"[warmup] failed: ${e.getMessage}") }
+    Warmup.run(spark, sfDir)
     val warmupSec = (System.nanoTime() - warmupT0) / 1e9
     System.err.println(f"[warmup] sec=$warmupSec%.3f")
 
@@ -227,16 +224,7 @@ object Bench {
     // pathological query while leaving ~30× headroom over the slowest
     // healthy query's full best-of-N at sf0.1.
     val perQuerySec = Watchdog.timeoutSec(default = 300L)
-    // SPARK_GRAFT_BENCH_ONLY=q1,q2 restricts the run to named queries —
-    // the regression gate's fresh-JVM RETRY lane (tools/preflight.sh):
-    // a rotating per-JVM degradation (real CPU growth on a random query
-    // subset, clean on immediate re-measurement) must be adjudicated by
-    // measuring again, not by arguing with one contaminated sample
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       // best-of-N policy lives in SteadyState.bestOf (shared with
       // ScaleProbe, unit-tested in SteadyStateSpec): min over runs is
       // steady-state cost, a >2× disagreement triggers a tie-break run,

@@ -69,7 +69,7 @@ object Graft {
 
   /** STATIC confs every graft session should be built with (static =
     * only settable at session construction; `registerAll` cannot apply
-    * them to a live session). Callers: pass to `SparkSession.builder`. */
+    * them to a live session). [[session]] builds with them. */
   val staticConfigs: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> CodegenCacheMaxEntries.toString,
     // Embedding the codegen-stage id in the generated CLASS NAME (a
@@ -96,6 +96,11 @@ object Graft {
     spark
   }
 
+  /** Local cores an engine session runs on: `SPARK_GRAFT_CPUS` when
+    * set, else every available processor. */
+  def cores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
   /** Build a session tuned for this engine: AQE on (runtime coalescing
     * + skew-join splitting), runtime bloom-filter join pruning on (a
     * selective dim predicate prunes the fact side before its shuffle —
@@ -104,7 +109,7 @@ object Graft {
     * `cores` maps to `local[cores]` for local runs; on a cluster pass a
     * master URL via `spark.master` externally and use [[registerAll]]
     * instead. */
-  def session(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  def session(cores: Int = Graft.cores): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")

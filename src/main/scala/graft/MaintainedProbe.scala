@@ -91,23 +91,13 @@ object MaintainedProbe {
   def main(args: Array[String]): Unit = {
     val deltas = if (args.length >= 2) Seq(args(0).toInt, args(1).toInt)
       else Seq(50, 500)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Graft.staticConfigs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.registerAll(spark)
+    val spark = Graft.session()
 
     val corpora = Seq("/root/testdata/sf0.1") ++
       sys.env.get("SPARK_GRAFT_SF1_DIR")
         .filter(dir => new java.io.File(dir).isDirectory)
     try {
-      try Warmup.run(spark, corpora.head)
-      catch { case e: Throwable => System.err.println(s"[warmup] failed: ${e.getMessage}") }
+      Warmup.run(spark, corpora.head)
 
       val pid = ProcessHandle.current().pid()
       val rows = corpora.map { srcDir =>

@@ -3,18 +3,20 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB breakdown of a single registered query — the measurement
   * tool guide §1 asks for before touching anything: a query whose wall
   * far exceeds CPU/cores is either a sequential mini-job swarm (many
   * short jobs whose scheduling latency dominates) or a few
-  * low-parallelism stages; this prints which, per query, from one run.
+  * low-parallelism stages; this prints which, per query, for one
+  * profiled run. Job counts of one query vary by ±1 between JVMs
+  * (AQE's asynchronous query-stage jobs), so compare several runs per
+  * side.
   *
   * `sbt "runMain graft.QueryProfiler /root/testdata/sf0.1 q1,q2"` —
-  * cores from SPARK_GRAFT_CPUS (default 32). First execution of each
-  * query is untimed (scaffold build + codegen absorption), the second
-  * is the profiled one, matching Bench's steady-state policy.
+  * cores from [[Graft.cores]]. First execution of each query is
+  * untimed (scaffold build + codegen absorption), the second is the
+  * profiled one, matching Bench's steady-state policy.
   */
 object QueryProfiler {
 
@@ -53,22 +55,12 @@ object QueryProfiler {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(Seq("doc_card_incremental"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Graft.staticConfigs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.registerAll(spark)
-    try Warmup.run(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"[warmup] ${e.getMessage}") }
+    val fns = SparkEntry.select(names).toMap
+    val spark = Graft.session()
+    Warmup.run(spark, sfDir)
 
     names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query: $name"))
+      val fn = fns(name)
       // run 1: scaffold + codegen, untimed
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
       // run 2: profiled

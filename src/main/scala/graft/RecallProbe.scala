@@ -141,16 +141,7 @@ object RecallProbe {
        else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1"))
         .filter(d => new java.io.File(d).isDirectory)
     require(sfDirs.nonEmpty, "no sf dirs found")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Graft.staticConfigs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Graft.registerAll(spark)
+    val spark = Graft.session()
     try {
       val all = sfDirs.map { d =>
         val tiers = frontier(spark, d)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-slope probe (VERDICT r4 ask #3): runs the headline query
   * pairs at sf0.001 / sf0.01 / sf0.1 and prints one JSON line with
   * best-of-3 seconds per (query, sf) plus the fitted log-log slope per
@@ -40,26 +38,12 @@ object ScaleProbe {
       "/root/testdata/sf0.1").filter(d => new java.io.File(d).isDirectory)
       ++ sf1Dir)
     require(sfDirs.nonEmpty, "no sf dirs found under /root/testdata")
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Graft.staticConfigs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the engine's standard surface: SQL functions + the lambda-invariant
-    // hoist rule, so the gate exercises what library sessions run
-    Graft.registerAll(spark)
+    val qs = SparkEntry.select(names).toMap
+    val spark = Graft.session()
 
     try {
-      try Warmup.run(spark, sfDirs.head)
-      catch { case e: Throwable => System.err.println(s"[warmup] failed: ${e.getMessage}") }
+      Warmup.run(spark, sfDirs.head)
 
-      val qs = SparkEntry.queries
       // times(query)(sfDir) = best-of-3 seconds (SteadyState.runsOf shares
       // the Bench measurement policy: min over runs, re-run failures keep
       // the successful timings)

@@ -26,6 +26,17 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     RelationalQueries.defs ++ PipelineQueries.defs
 
+  /** The registered `(name, fn)` pairs for `names`, sorted by name, or
+    * all of them when `names` is empty. Fails before any query runs if
+    * a name is not registered. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val qs = queries
+    val unknown = names.filterNot(qs.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    (if (names.isEmpty) qs.toSeq else names.distinct.map(n => n -> qs(n)))
+      .sortBy(_._1)
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,23 +13,10 @@ object Verify {
     // driver contract: exactly (sfDir, outDir); extra names are a
     // builder-local filter for iterating on a single query
     val Array(sfDir, outDir, only @ _*) = args
-    require(only.forall(SparkEntry.queries.contains),
-      s"unknown queries: ${only.filterNot(SparkEntry.queries.contains).mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Graft.staticConfigs)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the engine's standard surface: SQL functions + the lambda-invariant
-    // hoist rule, so the gate exercises what library sessions run
-    Graft.registerAll(spark)
+    val selected = SparkEntry.select(only)
+    val spark = Graft.session()
     new java.io.File(outDir).mkdirs()
-    try Warmup.run(spark, sfDir)
-    catch { case e: Throwable => System.err.println(s"[warmup] failed: ${e.getMessage}") }
+    Warmup.run(spark, sfDir)
     // Per-query watchdog (round-6 lesson: ONE non-terminating query
     // zeroed the whole round's correctness artifact). A timed-out query
     // gets its job group cancelled and a red line; everyone else's row
@@ -39,9 +25,7 @@ object Verify {
     val perQuerySec = Watchdog.timeoutSec(default = 120L)
     var nOk, nFail = 0
     val t0All = System.nanoTime()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       val t0 = System.nanoTime()
       Watchdog.bounded(spark, s"verify-$name", perQuerySec) {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")

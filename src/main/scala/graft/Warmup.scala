@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -8,10 +10,15 @@ import org.apache.spark.sql.functions._
   * cost (Janino compilation + JIT + Hadoop committer init — measured at
   * 200s+ for the first real job, sub-second after). Running a few tiny
   * jobs through the same machinery first keeps per-query timings honest
-  * in Bench and Verify.
+  * in Bench and Verify. A failed warmup is logged and swallowed: it
+  * only shifts first-use cost into the first timed query.
   */
 object Warmup {
-  def run(spark: SparkSession, sfDir: String): Unit = {
+  def run(spark: SparkSession, sfDir: String): Unit =
+    try warm(spark, sfDir)
+    catch { case NonFatal(e) => System.err.println(s"[warmup] failed: ${e.getMessage}") }
+
+  private def warm(spark: SparkSession, sfDir: String): Unit = {
     val t0 = System.nanoTime()
     val nation = spark.read.parquet(s"$sfDir/nation.parquet")
     val region = spark.read.parquet(s"$sfDir/region.parquet")

@@ -61,11 +61,11 @@ object SizedSession {
     spark.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt)
       .getOrElse(spark.sparkContext.defaultParallelism)
 
-  /** Sized sessions are CACHED and REUSED per (parent, width, extra
-    * confs) — one `newSession()` per distinct width, not per refresh
-    * call. This is not an allocation nicety: Spark 4 gives every
-    * session its own EXECUTOR-SIDE artifact state, i.e. its own
-    * classloader, and the whole-stage-codegen compile cache is keyed by
+  /** Sized sessions are CACHED and REUSED per (parent, width, confs) —
+    * one `newSession()` per distinct width, not per refresh call. This
+    * is not an allocation nicety: Spark 4 gives every session its own
+    * EXECUTOR-SIDE artifact state, i.e. its own classloader, and the
+    * whole-stage-codegen compile cache is keyed by
     * `(ClassLoader weakref, source)` (see `CodeGenerator.cache`). A
     * fresh session per refresh therefore guaranteed a codegen-cache
     * MISS for every task-side compile of every refresh execution —
@@ -74,19 +74,28 @@ object SizedSession {
     * cache's load lock (the round-17 "degraded JVM" taskSum ≫ CPU
     * signature). Reusing the session reuses the classloader and the
     * compiled classes. Sessions are never conf-mutated after creation
-    * (extra confs are part of the cache key), so sharing is safe; the
-    * map is bounded by the distinct widths in use (≤ session width). */
+    * (confs are part of the cache key), so sharing is safe. The cache
+    * is keyed WEAKLY on the parent instance (a child holds no reference
+    * to its parent), so a parent's children are freed with it. */
   private val cached =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, Int, Map[String, String]), SparkSession]()
+    new java.util.WeakHashMap[SparkSession,
+      scala.collection.mutable.Map[(Int, Map[String, String]), SparkSession]]()
 
   /** An isolated session whose shuffle width is sized for `rows`.
     * Returns the CALLER's session unchanged when the sized width
     * already equals the session width (no isolation overhead), or when
     * `rows` is unknown (None — legacy sidecars without row counts):
     * unknown volume must never silently under-parallelize.
-    * `extraConfs` are applied at creation and participate in the reuse
-    * key — callers must NOT mutate the returned session's conf. */
+    *
+    * `newSession` means a FRESH SessionState: the caller's runtime
+    * confs don't carry on their own, so a sized refresh writing
+    * timestamps would silently revert to INT96 output and
+    * ANSI/timezone-sensitive expressions could diverge from the
+    * caller's semantics (round-16 ADVICE). Every runtime-modifiable
+    * conf of the caller is therefore copied into the sized session,
+    * except the shuffle width — overriding it is the whole point.
+    * `extraConfs` are applied on top at creation and participate in the
+    * reuse key — callers must NOT mutate the returned session's conf. */
   def forRows(
       spark: SparkSession, rows: Option[Long],
       rowsPerPartition: Long = RefreshRowsPerPartition,
@@ -97,8 +106,9 @@ object SizedSession {
         val p = widthFor(spark, r, rowsPerPartition)
         if (p >= sessionWidth(spark) && extraConfs.isEmpty) spark
         else {
-          val carried = CarriedConfs.flatMap(k =>
-            spark.conf.getOption(k).map(k -> _)).toMap
+          val carried = spark.conf.getAll.filter { case (k, _) =>
+            k != "spark.sql.shuffle.partitions" && spark.conf.isModifiable(k)
+          }
           // NOTE (round 18): defaulting AQE OFF here was tried and
           // REVERTED — the refresh family got slightly slower
           // (doc_neardup_incremental 2.9 → 3.5 s), because AQE's
@@ -107,32 +117,18 @@ object SizedSession {
           // genuinely want it off (pageRank's clamped tiny graph) pass
           // it via extraConfs.
           val confs = carried ++ extraConfs
-          val key = (System.identityHashCode(spark).toString, p, confs)
-          cached.computeIfAbsent(key, _ => {
-            val s = spark.newSession()
-            // `newSession` means a FRESH SessionState: the caller's
-            // runtime confs don't carry, so a sized refresh writing
-            // timestamps would silently revert to INT96 output and
-            // ANSI/timezone-sensitive expressions could diverge from
-            // the caller's semantics (round-16 ADVICE). Copy the
-            // semantic confs the engine sets or depends on before
-            // clamping width.
-            confs.foreach { case (k, v) => s.conf.set(k, v) }
-            s.conf.set("spark.sql.shuffle.partitions", p.toString)
-            s
-          })
+          cached.synchronized {
+            val children = cached.computeIfAbsent(spark,
+              _ => scala.collection.mutable.HashMap.empty)
+            children.getOrElseUpdate((p, confs), {
+              val s = spark.newSession()
+              confs.foreach { case (k, v) => s.conf.set(k, v) }
+              s.conf.set("spark.sql.shuffle.partitions", p.toString)
+              s
+            })
+          }
         }
     }
-
-  /** Runtime confs that change QUERY SEMANTICS or OUTPUT ENCODING and
-    * must follow the caller into a sized session. Width confs are
-    * deliberately excluded — overriding them is the whole point. */
-  private val CarriedConfs = Seq(
-    "spark.sql.parquet.outputTimestampType",
-    "spark.sql.session.timeZone",
-    "spark.sql.ansi.enabled",
-    "spark.sql.caseSensitive",
-    "spark.sql.parquet.compression.codec")
 
   /** [[forRows]] sized by the metadata-only changed-bucket row bound
     * of a MergeTable version transition — the refresh family's

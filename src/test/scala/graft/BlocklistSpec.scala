@@ -61,7 +61,6 @@ class BlocklistSpec extends SparkSpec {
   }
 
   test("SQL surface: blocklist_any / blocklist_matches; non-constant patterns rejected") {
-    Graft.registerAll(spark)
     Seq((1L, "the quick brown fox"), (2L, "nothing here"), (3L, "quick quick brown"))
       .toDF("id", "t").createOrReplaceTempView("bl_in")
     val rows = spark.sql(

@@ -36,7 +36,6 @@ class BloomExprSpec extends SparkSpec {
   }
 
   test("bloom_agg / bloom_might_contain work from plain SQL") {
-    Graft.registerAll(spark)
     hashes(100, 3).createOrReplaceTempView("bloom_in")
     val bf = spark.sql(
       "SELECT bloom_agg(h, 1000, 0.001) AS bf FROM bloom_in")

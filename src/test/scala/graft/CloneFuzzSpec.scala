@@ -126,7 +126,6 @@ class CloneFuzzSpec extends SparkSpec {
     }
 
     // the hybrid count over the diverged clone agrees with its model
-    Graft.registerAll(spark)
     spark.read.format("graft").option("path", clone).load()
       .createOrReplaceTempView("clone_fuzz_t")
     assert(spark.sql("SELECT COUNT(*) AS n FROM clone_fuzz_t WHERE id >= 0")

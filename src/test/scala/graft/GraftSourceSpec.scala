@@ -17,10 +17,6 @@ import graft.sources.GraftRelation
 class GraftSourceSpec extends SparkSpec {
   import spark.implicits._
 
-  // the library session surface: installs GraftMetaAggregate, so the
-  // hybrid-count assertions below see the rule a real session runs
-  Graft.registerAll(spark)
-
   private def tmpDir(): String =
     Files.createTempDirectory("graft-source").toString
 

@@ -6,7 +6,6 @@ class GraftSqlSpec extends SparkSpec {
   import spark.implicits._
 
   test("registered tables and functions answer pure SQL end-to-end") {
-    Graft.registerAll(spark)
     Graft.registerTables(spark, sf0001)
 
     val rev = spark.sql(
@@ -45,7 +44,6 @@ class GraftSqlSpec extends SparkSpec {
   }
 
   test("curation functions answer pure SQL, same trees as the Column API") {
-    Graft.registerAll(spark)
     Graft.registerTables(spark, sf0001)
 
     val masked = spark.sql(

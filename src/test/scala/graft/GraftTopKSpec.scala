@@ -16,8 +16,6 @@ import graft.pipeline.MergeTable
 class GraftTopKSpec extends SparkSpec {
   import spark.implicits._
 
-  Graft.registerAll(spark)
-
   private def tmpDir(): String =
     Files.createTempDirectory("graft-topk").toString
 

@@ -108,7 +108,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("sql surface: kmv_agg / kmv_merge / scalars, partition-invariant") {
-    Graft.registerAll(spark)
     val df = (0 until 1000).map(i => (i % 3, s"tok${i % 250}")).toDF("g", "tok")
     df.createOrReplaceTempView("kmv_in")
     for (parts <- Seq(1, 7)) {
@@ -138,7 +137,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("sql surface: pairwise overlap scalars against DataFrame set ops") {
-    Graft.registerAll(spark)
     val a = (0 until 300).map(i => s"w$i")
     val b = (150 until 500).map(i => s"w$i")
     (a.map(("a", _)) ++ b.map(("b", _))).toDF("side", "tok")
@@ -158,7 +156,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("plan: kmv_agg aggregates under ObjectHashAggregateExec with a partial map side") {
-    Graft.registerAll(spark)
     val df = (0 until 100).map(i => (i % 2, i.toLong)).toDF("g", "h")
     df.createOrReplaceTempView("kmv_plan_in")
     val q = spark.sql("SELECT g, kmv_agg(h, 64) FROM kmv_plan_in GROUP BY g")
@@ -168,7 +165,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("analysis: non-foldable k is rejected at analysis time") {
-    Graft.registerAll(spark)
     spark.range(5).selectExpr("id AS g", "id AS h").createOrReplaceTempView("kmv_bad_in")
     val e = intercept[Exception] {
       spark.sql("SELECT kmv_agg(h, g) FROM kmv_bad_in").collect()
@@ -189,7 +185,6 @@ class KmvSpec extends SparkSpec {
   }
 
   test("nulls: null hashes are skipped; empty group yields an empty exact sketch") {
-    Graft.registerAll(spark)
     Seq((1, Some(5L)), (1, None), (2, None)).toDF("g", "h")
       .createOrReplaceTempView("kmv_null_in")
     val rows = spark.sql(

@@ -18,8 +18,6 @@ import graft.pipeline.MergeTable
 class MetaAggregatePushdownSpec extends SparkSpec {
   import spark.implicits._
 
-  Graft.registerAll(spark)
-
   private def tmpDir(): String =
     Files.createTempDirectory("graft-metaagg").toString
 
@@ -651,7 +649,7 @@ class MetaAggregatePushdownSpec extends SparkSpec {
 
   test("MIN/MAX over timestamp and date columns answer from metadata; wrapped aliases push down (round 16)") {
     val dir = tmpDir()
-    // engine session default (registerAll above): parquet timestamps
+    // engine session default (Graft.registerAll): parquet timestamps
     // write as INT64 MICROS, so footer stats are the epoch values
     val base = spark.range(0, 600).select(
       col("id"),

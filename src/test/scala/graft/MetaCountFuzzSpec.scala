@@ -25,8 +25,6 @@ import graft.pipeline.MergeTable
 class MetaCountFuzzSpec extends SparkSpec {
   import spark.implicits._
 
-  Graft.registerAll(spark)
-
   private def tmpDir(): String =
     Files.createTempDirectory("graft-cntfuzz").toString
 

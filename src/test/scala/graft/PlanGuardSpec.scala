@@ -109,9 +109,9 @@ class PlanGuardSpec extends SparkSpec {
         .select(col("doc_id"), explode(col("h")).as("hv"))
     }
     // the control must see the UNREPAIRED optimizer: strip the engine's
-    // HoistLambdaInvariants rule (installed by Graft.registerAll, which
-    // an earlier suite may have run on this shared session) for the
-    // duration of the teeth check — HoistLambdaInvariantsSpec owns the
+    // HoistLambdaInvariants rule (the shared test session is an engine
+    // session, so Graft.registerAll installed it) for the duration of
+    // the teeth check — HoistLambdaInvariantsSpec owns the
     // with-rule assertions
     val saved = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =

@@ -121,7 +121,6 @@ class QSketchSpec extends SparkSpec {
   }
 
   test("SQL: the registered qsketch family works end-to-end") {
-    Graft.registerAll(spark)
     (1L to 100L).map(i => ("g", i % 10)).toDF("grp", "v")
       .createOrReplaceTempView("qsk_in")
     val row = spark.sql(
@@ -142,7 +141,6 @@ class QSketchSpec extends SparkSpec {
     // ADVICE r8: a column passed where a literal belongs must fail with
     // the intended message during analysis, not surface as a confusing
     // executor-side eval-with-no-row error
-    Graft.registerAll(spark)
     (1L to 10L).map(i => ("g", i % 5)).toDF("grp", "v")
       .createOrReplaceTempView("qsk_bad")
     val e1 = intercept[org.apache.spark.sql.AnalysisException] {
@@ -187,7 +185,6 @@ class QSketchSpec extends SparkSpec {
   }
 
   test("SQL: qsketch_ks over grouped sketches; shifted groups drift, identical do not") {
-    Graft.registerAll(spark)
     val rows = (0 until 600).map { i =>
       val side = i < 300 // first/second half — residues stay uniform per side
       // group "same": both sides draw i%10; group "shift": second side +4

@@ -3,25 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one per JVM). */
+/** Shared local SparkSession for all suites (one per JVM): the engine
+  * session itself, so every suite runs with the engine's static confs,
+  * SQL functions and optimizer rules regardless of suite order. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the engine's write default (Graft.registerAll sets the same):
-      // INT64 MICROS timestamps, whose footer stats feed the zone
-      // sidecar — suites that skip registerAll must not silently write
-      // stat-less INT96 (round 16). Deterministic here because the
-      // session is shared across suites in one JVM.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Graft.session(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

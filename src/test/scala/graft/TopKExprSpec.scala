@@ -33,7 +33,6 @@ class TopKExprSpec extends SparkSpec {
   }
 
   test("SQL top_k(id, score, k) matches the Column API, with int/decimal casts") {
-    Graft.registerAll(spark)
     Tables.orders(spark, sf0001).createOrReplaceTempView("topk_orders")
     val sql = explodeTopK(spark.sql(
       """SELECT o_custkey, top_k(o_orderkey, o_totalprice, 3) AS topk
