@@ -78,7 +78,7 @@ object RecallProbe {
     def exactRounded(q: Array[Double]): DataFrame = {
       val nrm = math.sqrt(q.map(x => x * x).sum)
       val qn = if (nrm > 0) q.map(_ / nrm) else q
-      val qCol = array(qn.map(lit): _*)
+      val qCol = graft.expr.VectorExpressions.queryVector(qn)
       float
         .withColumn("score",
           round(VectorIndex.dot(col("embedding"), qCol) /

@@ -1,8 +1,16 @@
 package graft.embed
 
 import scala.util.hashing.MurmurHash3
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** O-EMB — the embedding operator contract from the reference
   * (`scripts/services/embedder_service.py:4-9`): text → `float[dim]`,
@@ -74,25 +82,46 @@ final case class HashingEmbedder(dim: Int = 1024) extends Embedder {
 }
 
 object Embedder {
-  /** Attach an `embedding ARRAY<FLOAT>` column computed from `textCol`.
-    * Runs as `mapPartitions` so a model-backed embedder can batch; the
-    * hashing embedder is pure CPU either way. Preserves all columns. */
+  /** Attach an `embedding ARRAY<FLOAT>` column computed from `textCol`
+    * by one codegen'd [[EmbedText]] expression. Preserves all columns. */
   def embedColumn(
       df: DataFrame,
       textCol: String,
       embedder: Embedder = HashingEmbedder(),
-      outCol: String = "embedding"): DataFrame = {
-    val spark = df.sparkSession
-    import org.apache.spark.sql.catalyst.encoders.RowEncoder
-    import org.apache.spark.sql.types.{ArrayType, FloatType, StructField}
-    val outSchema = df.schema.add(StructField(outCol, ArrayType(FloatType, containsNull = false)))
-    val enc = RowEncoder.encoderFor(outSchema)
-    val idx = df.schema.fieldIndex(textCol)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val vec = embedder.padTruncate(embedder.embed(r.getString(idx)))
-        Row.fromSeq(r.toSeq :+ vec.toSeq)
-      }
-    }(enc)
+      outCol: String = "embedding"): DataFrame =
+    df.withColumn(outCol, Bridge.toColumn(EmbedText(Bridge.toExpr(col(textCol)), embedder)))
+}
+
+/** `embedder` applied to a string column: `ARRAY<FLOAT>` of exactly
+  * `embedder.dim`, never null (a null text embeds as the embedder
+  * embeds null — the zero vector for [[HashingEmbedder]]). The field is
+  * still declared nullable, the schema the index has always had. Each
+  * task deserializes its own copy of the expression and so of the
+  * embedder: one [[HttpEmbedder]] client per task. */
+case class EmbedText(child: Expression, embedder: Embedder) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
+  override def nullable: Boolean = true
+  override def eval(input: InternalRow): Any =
+    EmbedText.embedOf(embedder, child.eval(input).asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("embedder", embedder, classOf[Embedder].getName)
+    val text = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${text.code}
+      boolean ${ev.isNull} = false;
+      ${classOf[ArrayData].getName} ${ev.value} =
+        graft.embed.EmbedText.embedOf($ref, ${text.isNull} ? null : ${text.value});""")
   }
+  override def prettyName: String = "embed"
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
+object EmbedText {
+  /** Called from generated code: `embedder` over one text (a null text
+    * is passed on as null), padded/truncated to `dim`. Not on `object
+    * Embedder`: its static forwarders land on the `Embedder` interface,
+    * and Janino cannot call static interface methods. */
+  def embedOf(embedder: Embedder, text: UTF8String): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(
+      embedder.padTruncate(embedder.embed(if (text == null) null else text.toString)))
 }

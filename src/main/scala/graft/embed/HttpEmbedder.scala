@@ -12,9 +12,10 @@ import java.time.Duration
   * Config-gated by construction: nothing in this engine instantiates it
   * unless an endpoint is explicitly supplied — this environment is
   * offline, and every default path uses the deterministic
-  * [[HashingEmbedder]]. At scale the `mapPartitions` seam in
-  * [[Embedder.embedColumn]] means one client per partition and
-  * batch-friendly reuse, not one connection per row.
+  * [[HashingEmbedder]]. At scale [[Embedder.embedColumn]] runs one
+  * [[EmbedText]] expression, which each task deserializes once: one
+  * client per task, reused for every row of the task, not one
+  * connection per row.
   */
 final case class HttpEmbedder(
     endpoint: String,

@@ -134,6 +134,16 @@ case class BloomMightContain(sketchExpr: Expression, hashExpr: Expression)
   }
 
   override def prettyName: String = "bloom_might_contain"
+
+  /** A literal sketch prints as `sketch[<n> bytes]`, not as hex: a
+    * megabyte sketch would otherwise be rendered into every plan
+    * string of every query that probes it. */
+  private def sketchString(full: Expression => String): String = sketchExpr match {
+    case Literal(b: Array[Byte], BinaryType) => s"sketch[${b.length} bytes]"
+    case other => full(other)
+  }
+  override def toString: String = s"$prettyName(${sketchString(_.toString)}, $hashExpr)"
+  override def sql: String = s"$prettyName(${sketchString(_.sql)}, ${hashExpr.sql})"
 }
 
 object BloomExpr {

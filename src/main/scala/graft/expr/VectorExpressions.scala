@@ -1,21 +1,24 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, JavaCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expressions for the vector hot path (O-KNN, dedup).
   *
-  * The higher-order-function formulation (`aggregate(zip_with(...))`) is
-  * interpreted per element — three lambda invocations and boxing per
-  * float. These expressions evaluate over `ArrayData` primitives and
-  * participate in whole-stage codegen (`doGenCode` emits a call into a
-  * tight static scalar loop), which is what a 100 TB scan needs. Same
-  * arithmetic as the HOF form: sequential left-to-right accumulation in
-  * double. Inputs: `ARRAY<FLOAT>` or `ARRAY<DOUBLE>` (mixed allowed).
+  * The higher-order-function formulation (`aggregate(zip_with(...))`,
+  * `transform(x / n)`) is interpreted per element — lambda invocations
+  * and boxing per float. These expressions evaluate over `ArrayData`
+  * primitives and participate in whole-stage codegen (`doGenCode` emits
+  * a call into a tight static scalar loop), which is what a 100 TB scan
+  * needs. Same arithmetic as the HOF form: sequential left-to-right
+  * accumulation in double. Inputs: `ARRAY<FLOAT>` or `ARRAY<DOUBLE>`
+  * (mixed allowed). A driver-built constant vector enters a plan as one
+  * [[QueryVector]] leaf, never as an array of literals.
   */
 object VectorExpressions {
 
@@ -105,6 +108,82 @@ object VectorExpressions {
     }
     override protected def withNewChildrenInternal(l: Expression, r: Expression) =
       copy(left = l, right = r)
+  }
+
+  /** Called from generated code: the unit-normalized double form of a
+    * numeric array, bit-identical to the HOF form
+    * `when(n > 0, transform(a, x => double(x) / n)).otherwise(transform(a, double))`
+    * with `n = l2Norm(a)`: null elements stay null and add nothing to
+    * the norm (a columnar array leaves an undefined value in a null
+    * slot, so they are skipped, not read), a zero vector keeps its
+    * double cast, and a NaN norm divides, because Spark orders NaN
+    * above every number. */
+  def normalizedOf(a: ArrayData, isFloat: Boolean): ArrayData = {
+    val len = a.numElements()
+    var hasNull = false
+    var s = 0.0
+    var i = 0
+    while (i < len) {
+      if (a.isNullAt(i)) hasNull = true
+      else { val x = getD(a, isFloat, i); s += x * x }
+      i += 1
+    }
+    val n = math.sqrt(s)
+    val divide = n > 0.0 || java.lang.Double.isNaN(n)
+    @inline def at(i: Int): Double = if (divide) getD(a, isFloat, i) / n else getD(a, isFloat, i)
+    if (hasNull) {
+      val out = new Array[Any](len)
+      i = 0
+      while (i < len) { if (!a.isNullAt(i)) out(i) = at(i); i += 1 }
+      new GenericArrayData(out)
+    } else {
+      val out = new Array[Double](len)
+      i = 0
+      while (i < len) { out(i) = at(i); i += 1 }
+      UnsafeArrayData.fromPrimitiveArray(out)
+    }
+  }
+
+  /** Unit-length double form of a numeric array (zero vectors stay
+    * zero) — the write-time normalization of the vector index. The
+    * element type is nullable, as the HOF form's is. */
+  case class Normalized(child: Expression) extends UnaryExpression {
+    override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+    override def nullSafeEval(v: Any): Any =
+      normalizedOf(v.asInstanceOf[ArrayData], isFloat(child.dataType))
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val f = isFloat(child.dataType)
+      defineCodeGen(ctx, ev, a => s"graft.expr.VectorExpressions.normalizedOf($a, $f)")
+    }
+    override def prettyName: String = "normalized"
+    override protected def withNewChildInternal(c: Expression) = copy(child = c)
+  }
+
+  /** A driver-built constant vector (a search query, a hyperplane) as
+    * ONE plan node. `array(v.map(lit): _*)` is `v.length` literal nodes
+    * that every eager DataFrame step re-analyzes, and ConstantFolding
+    * turns them into one array literal printed in full into every plan
+    * string Spark renders per query. This leaf is not foldable, so it
+    * never becomes that literal; codegen passes it as one reference to a
+    * primitive-backed array; it prints as `query[<dim>]`. Equality is by
+    * value. */
+  case class QueryVector(values: Array[Double]) extends LeafExpression {
+    @transient private lazy val data: ArrayData = UnsafeArrayData.fromPrimitiveArray(values)
+    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+    override def nullable: Boolean = false
+    override def foldable: Boolean = false
+    override def eval(input: InternalRow): Any = data
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("query", data, classOf[ArrayData].getName)
+      ExprCode.forNonNullValue(JavaCode.global(ref, dataType))
+    }
+    override def toString: String = s"query[${values.length}]"
+    override def sql: String = toString
+    override def equals(o: Any): Boolean = o match {
+      case q: QueryVector => java.util.Arrays.equals(values, q.values)
+      case _ => false
+    }
+    override def hashCode(): Int = java.util.Arrays.hashCode(values)
   }
 
   // ------------------------------------------------- int8 quantization
@@ -223,6 +302,8 @@ object VectorExpressions {
   def dot(a: Column, b: Column): Column = Bridge.toColumn(DotProduct(e(a), e(b)))
   def l2Norm(a: Column): Column = Bridge.toColumn(L2Norm(e(a)))
   def cosine(a: Column, b: Column): Column = Bridge.toColumn(CosineSimilarity(e(a), e(b)))
+  def normalized(a: Column): Column = Bridge.toColumn(Normalized(e(a)))
+  def queryVector(v: Array[Double]): Column = Bridge.toColumn(QueryVector(v))
   def maxAbs(a: Column): Column = Bridge.toColumn(MaxAbs(e(a)))
   def quantizeInt8(a: Column, scale: Column): Column =
     Bridge.toColumn(QuantizeInt8(e(a), e(scale)))

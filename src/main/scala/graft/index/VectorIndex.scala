@@ -3,6 +3,8 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expr.VectorExpressions.queryVector
+
 /** O-KNN / O-THRESH / S9 — the vector index.
   *
   * The reference stores `(uuid, float[1024], payload)` points in Qdrant
@@ -17,7 +19,13 @@ import org.apache.spark.sql.functions._
   *    plans as `TakeOrderedAndProjectExec`: per-partition heap top-k on
   *    executors, k-way merge on the driver — no global sort, no collect;
   *  - all arithmetic is done in double (cast from float) so results are
-  *    stable and match the DuckDB oracle bit-for-bit after rounding.
+  *    stable and match the DuckDB oracle bit-for-bit after rounding;
+  *  - vectors stay native in the plan: write-time normalization is one
+  *    codegen'd [[graft.expr.VectorExpressions.Normalized]], and a query
+  *    vector enters the search plan as one
+  *    [[graft.expr.VectorExpressions.QueryVector]] leaf (printed
+  *    `query[<dim>]`), not as `dim` literals that every eager step
+  *    re-analyzes and every plan string prints in full.
   */
 object VectorIndex {
 
@@ -41,19 +49,18 @@ object VectorIndex {
       lit(0.0),
       (acc, x) => acc + x)
 
-  /** L2-normalize an `ARRAY<FLOAT/DOUBLE>` column to unit length
-    * (as doubles). Zero vectors normalize to zero. */
-  def normalized(a: Column): Column = {
-    val n = l2Norm(a)
-    when(n > 0, transform(a, x => x.cast("double") / n))
-      .otherwise(transform(a, x => x.cast("double")))
-  }
-
-  /** Write-time normalization: returns the frame with `embCol` replaced by
-    * its unit-normalized double form. Do this once at ingest so every
-    * search is a dot product. */
+  /** Write-time normalization: returns the frame with `embCol`
+    * (`ARRAY<FLOAT/DOUBLE>`) replaced by its unit-length double form,
+    * zero vectors staying zero. Do this once at ingest so every search
+    * is a dot product. */
   def withNormalized(df: DataFrame, embCol: String = "embedding"): DataFrame =
-    df.withColumn(embCol, normalized(col(embCol)))
+    df.withColumn(embCol, graft.expr.VectorExpressions.normalized(col(embCol)))
+
+  /** `query` scaled to unit length (a zero query stays zero). */
+  private def unit(query: Array[Double]): Array[Double] = {
+    val n = math.sqrt(query.map(x => x * x).sum)
+    if (n > 0) query.map(_ / n) else query
+  }
 
   /** Per-group element-wise mean vectors (class centroids / doc-level
     * mean pooling of chunk embeddings). Shape: explode to (group, pos,
@@ -138,10 +145,7 @@ object VectorIndex {
       overfetch: Int = 16): DataFrame = {
     require(overfetch >= 1)
     val idCol = index.columns.head
-    val qn = {
-      val n = math.sqrt(query.map(x => x * x).sum)
-      if (n > 0) query.map(_ / n) else query
-    }
+    val qn = unit(query)
     require(qn.length <= 64, "searchBinaryReranked: single-word (<=64-dim) form")
     val qsig = qn.zipWithIndex.foldLeft(0L) { case (acc, (x, j)) =>
       if (x > 0.0) acc | (1L << j) else acc
@@ -151,7 +155,7 @@ object VectorIndex {
       .orderBy(col("__h"), col(idCol))
       .limit(k * overfetch)
       .select(col(idCol), col(embCol))
-    val qCol = array(qn.map(lit): _*)
+    val qCol = queryVector(qn)
     candidates
       .withColumn("score", round(dot(col(embCol), qCol), 4))
       .filter(col("score") >= threshold)
@@ -173,10 +177,7 @@ object VectorIndex {
       query: Array[Double],
       k: Int = 5,
       threshold: Double = 0.5): DataFrame = {
-    val qn = {
-      val n = math.sqrt(query.map(x => x * x).sum)
-      if (n > 0) query.map(_ / n) else query
-    }
+    val qn = unit(query)
     val qs = qn.map(math.abs).foldLeft(0.0)(math.max)
     val qb = if (qs == 0.0) qn.map(_ => 0.toByte)
       else qn.map(x => math.round(x / qs * 127.0).toByte)
@@ -213,11 +214,8 @@ object VectorIndex {
     val candidates = searchQuantized(index, query, k * overfetch,
       threshold = -1.0) // exact threshold applies at the re-rank tier
       .select(col(idCol), col(embCol))
-    val qn = {
-      val n = math.sqrt(query.map(x => x * x).sum)
-      if (n > 0) query.map(_ / n) else query
-    }
-    val qCol = array(qn.map(lit): _*)
+    val qn = unit(query)
+    val qCol = queryVector(qn)
     candidates
       .withColumn("score", round(dot(col(embCol), qCol), 4))
       .filter(col("score") >= threshold)
@@ -580,10 +578,7 @@ object VectorIndex {
       query: Array[Double],
       k: Int = 5,
       threshold: Double = 0.5): DataFrame = {
-    val qn = {
-      val n = math.sqrt(query.map(x => x * x).sum)
-      if (n > 0) query.map(_ / n) else query
-    }
+    val qn = unit(query)
     val table = typedLit(cb.adcTable(qn).toSeq)
     index
       .withColumn("score",
@@ -618,12 +613,9 @@ object VectorIndex {
       threshold: Double = 0.5,
       embCol: String = "embedding"): DataFrame = {
     val idCol = index.columns.head
-    val qn = {
-      val n = math.sqrt(query.map(x => x * x).sum)
-      if (n > 0) query.map(_ / n) else query
-    }
+    val qn = unit(query)
     val table = typedLit(cb.adcTable(qn).toSeq)
-    val qCol = array(qn.map(lit): _*)
+    val qCol = queryVector(qn)
     index
       .withColumn("__adc",
         round(graft.expr.VectorExpressions.pqAdc(col("pqcode"), table, cb.ksub), 4))
@@ -678,11 +670,8 @@ object VectorIndex {
       threshold: Double = 0.5,
       embCol: String = "embedding",
       normalizedInput: Boolean = false): DataFrame = {
-    val qn = {
-      val n = math.sqrt(query.map(x => x * x).sum)
-      if (n > 0) query.map(_ / n) else query
-    }
-    val qCol = array(qn.map(lit): _*)
+    val qn = unit(query)
+    val qCol = queryVector(qn)
     val sim =
       if (normalizedInput) dot(col(embCol), qCol)
       else dot(col(embCol), qCol) / l2Norm(col(embCol))

@@ -768,7 +768,7 @@ object Dedup {
         }
       }
     val signBit: Array[Column] = planes.map { pl =>
-      (VectorIndex.dot(col("e"), array(pl.map(lit): _*)) >= 0).cast("int")
+      (VectorIndex.dot(col("e"), graft.expr.VectorExpressions.queryVector(pl)) >= 0).cast("int")
     }
     val bandKeys = (0 until numBands).map { b =>
       concat_ws("", signBit.slice(b * bandBits, (b + 1) * bandBits): _*)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.embed.{Embedder, HashingEmbedder}
+import graft.expr.VectorExpressions
 import graft.index.VectorIndex
 import graft.ops.{ChunkText, Dedup, ImportanceSampling, Packing, PairAssets, Sectionize, TextAnalysis, TextSanitize, TextSearch, UniqueNames}
 
@@ -56,7 +57,7 @@ object PipelineQueries {
     val emb = Tables.embeddings(s, d)
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-    val qCol = array(q.map(lit): _*)
+    val qCol = VectorExpressions.queryVector(q)
     emb.filter(col("vec_id") =!= 0)
       .withColumn("score", round(VectorIndex.cosine(col("embedding"), qCol), 4))
       .filter(col("score") >= 0.25)
@@ -83,7 +84,7 @@ object PipelineQueries {
     val qRaw = Tables.embeddings(s, d).filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble)
     val n = math.sqrt(qRaw.map(x => x * x).sum)
-    val qCol = array(qRaw.map(x => lit(x / n)): _*)
+    val qCol = VectorExpressions.queryVector(qRaw.map(_ / n).toArray)
     emb
       .withColumn("score", round(VectorIndex.dot(col("embedding"), qCol), 4))
       .filter(col("score") >= 0.25)
@@ -101,7 +102,7 @@ object PipelineQueries {
     val emb = Tables.embeddings(s, d)
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-    val qCol = array(q.map(lit): _*)
+    val qCol = VectorExpressions.queryVector(q)
     val ivf = VectorIndex.buildIvf(emb.filter(col("vec_id") =!= 0), nlist = 8)
     VectorIndex.probeCells(ivf, q, nprobe = 8).drop("cell")
       .withColumn("score", round(VectorIndex.cosine(col("embedding"), qCol), 4))
@@ -2013,7 +2014,7 @@ object PipelineQueries {
     val ivf = VectorIndex.loadIvf(s, indexPath)
     val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-    val qCol = array(q.map(lit): _*)
+    val qCol = VectorExpressions.queryVector(q)
     VectorIndex.probeCells(ivf, q, nprobe = ivf.nlist).drop("cell")
       .withColumn("score", round(VectorIndex.cosine(col("embedding"), qCol), 4))
       .filter(col("score") >= 0.25)
@@ -4559,7 +4560,7 @@ object PipelineQueries {
     val emb = Tables.embeddings(s, d)
     val q = emb.filter(col("vec_id") === 0)
       .select(col("embedding")).head().getSeq[Float](0).map(_.toDouble).toArray
-    val qCol = array(q.map(lit): _*)
+    val qCol = VectorExpressions.queryVector(q)
     val cosList = emb.filter(col("vec_id") =!= 0)
       .withColumn("score", round(VectorIndex.cosine(col("embedding"), qCol), 4))
       .select(col("vec_id").as("doc_id"), col("score"))

@@ -66,4 +66,22 @@ class BloomExprSpec extends SparkSpec {
     // tiny fpp on a tiny corpus: the sketch is effectively exact
     assert(bloom === exact)
   }
+
+  test("a literal sketch prints as its size, not as hex, and probes the same") {
+    // a range scan, so the probe is planned, not folded into a local relation
+    val in = spark.range(4000).select(xxhash64($"id").as("h"))
+    val bf = in.filter($"h" % 2 === 0).agg(BloomExpr.bloomAgg($"h", 100000L, 0.01).as("bf"))
+      .head().getAs[Array[Byte]](0)
+    assert(bf.length > 100000)
+    val probed = in.filter(BloomExpr.bloomMightContain(bf, $"h"))
+    val plan = probed.queryExecution.executedPlan.toString
+    assert(plan.contains(s"bloom_might_contain(sketch[${bf.length} bytes], "), plan)
+    assert(plan.length < 2000, s"plan string is ${plan.length} characters")
+    val formatted = probed.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    assert(formatted.length < 4000, s"formatted plan is ${formatted.length} characters")
+    val members = in.filter($"h" % 2 === 0).count()
+    val hits = probed.count()
+    assert(hits >= members && hits < members + 100, s"$hits hits for $members members")
+  }
 }
