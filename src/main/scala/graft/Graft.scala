@@ -32,6 +32,11 @@ object Graft {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.GraftTopK))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.GraftTopK
+    // a collected root ORDER BY + LIMIT runs as one job of plain task
+    // functions, not RDD.takeOrdered's cleaned closures
+    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKCollectStrategy))
+      spark.experimental.extraStrategies =
+        spark.experimental.extraStrategies :+ graft.plans.TopKCollectStrategy
     // MergeTable reads hand Spark EXPLICIT file lists (manifest-named,
     // typically 16-64 paths). Below this threshold Spark stats the
     // paths on the driver; above it, it schedules a distributed

@@ -62,6 +62,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // strategy (graft.plans.AsOfJoinStrategy) — config-only clusters
     // can plan AsOfJoinPlan nodes without any driver-side install
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    // a collected root ORDER BY + LIMIT without RDD.takeOrdered's
+    // per-request closure cleaning (graft.plans.TopKCollectStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.TopKCollectStrategy)
     // metadata-only COUNT/MIN/MAX/SUM/AVG over graft tables answer from
     // the zone sidecar with zero data scan (exactness-preserving,
     // rewrite-or-leave — see GraftMetaAggregate)

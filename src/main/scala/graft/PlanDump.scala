@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.FormattedMode
   *    products. PLANS.md is generated against the sf0.01 testdata.
   *  - `PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>` writes one file
   *    per named query, `<outDir>/<query>_<suffix>.txt`, holding the
-  *    exact `.explain("formatted")` string — the optimization-round
+  *    `.explain("formatted")` string, [[stable]] — the optimization-round
   *    evidence trail (`plans/r<N>/<query>_{before,after}.txt`), so
   *    before/after pairs can be generated from two checkouts.
   */
@@ -22,8 +22,8 @@ object PlanDump {
   val Headline = Seq(
     "q01_filter_scan"  -> "filter + projection pushdown into the parquet scan",
     "q04_join_star"    -> "star join: all dimensions broadcast, no fact shuffle",
-    "q09_topk"         -> "global top-k as TakeOrderedAndProject (no full sort)",
-    "knn_top5"         -> "vector search: codegen cosine + TakeOrderedAndProject",
+    "q09_topk"         -> "global top-k as TakeOrderedAndProjectCollect: per-partition heaps in one job, no full sort",
+    "knn_top5"         -> "vector search: codegen cosine + TakeOrderedAndProjectCollect",
     "dedup_minhash_lsh" -> "banded LSH: band-bucket join, no CartesianProduct",
     "q17_tumbling_window" -> "event-time window agg with partial aggregation",
     "q30_grouped_topk"  -> "typed top-k Aggregator: bounded map-side buffers, no window sort of the fact",
@@ -61,16 +61,35 @@ object PlanDump {
     "doc_meta_sum" -> "SUM/AVG pushdown (round 15): the whole query collapsed to a LocalRelation answered from the sidecar's format-4 exact per-file sum lines — zero scan nodes",
     "doc_meta_sum_filtered" -> "filtered SUM/AVG hybrid (round 15): FullyIn files fold their exact sum lines into literals; only the range-straddling boundary files scan, AVG merges as (sum_meta+sum_scan)/(count_meta+count_scan)",
     "doc_meta_sum_by_lang" -> "grouped SUM/AVG (round 15): lang-constant files attribute their exact sum lines per group; run-boundary files scan and one Union re-aggregation SUMs the partial sums",
-    "doc_topk_pruned" -> "zone-pruned global top-k (round 15): ORDER BY n_chars DESC LIMIT 10 scans only the files the running 10th bound admits; TakeOrderedAndProject over the subset, no full-corpus sort",
+    "doc_topk_pruned" -> "zone-pruned global top-k (round 15): ORDER BY n_chars DESC LIMIT 10 scans only the files the running 10th bound admits; TakeOrderedAndProjectCollect over the subset, no full-corpus sort",
     "events_meta_ts_minmax" -> "timestamp metadata ladder (round 16): MIN(ts)/MAX(ts)/COUNT over the ts-clustered events table collapse to a LocalRelation — epoch-micros zones answer the span audit with zero scan, unix_micros wrappers evaluated in the rewrite",
     "events_topk_recent" -> "ts-ordered top-k (round 16): ORDER BY ts DESC LIMIT 10 reads only the files whose ts-zone max reaches the 10th bound — the recency query touches the tail slab, not the table",
     "events_meta_per_week" -> "time-derived grouped pushdown (round 16): GROUP BY CAST(date_trunc('week', ts) AS DATE) — week-constant files contribute counts from the sidecar (monotone floors make endpoint equality prove constancy), only week-straddling files scan through the Union's boundary branch",
     "doc_topk_multikey" -> "multi-key lexicographic top-k (round 16): ORDER BY lang, n_chars DESC LIMIT 10 composes BOTH columns' zones on the (lang, n_chars) clusterByCols layout — the tuple fold excludes first-language files past the k-th bound that the single-key fold must keep")
 
   /** The plan the session runs `name` under, as `.explain("formatted")`
-    * prints it (scan details: PushedFilters/ReadSchema). */
+    * prints it (scan details: PushedFilters/ReadSchema), [[stable]]. */
   private def plan(spark: SparkSession, sfDir: String, name: String): String =
-    SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+    stable(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode))
+
+  /** What changes between JVMs at one commit, masked so two dumps of one
+    * commit are byte-identical and a diff between commits shows only
+    * plan changes: expression ids (`#12` → `#x`, as Spark's
+    * `PlanStabilitySuite` masks them), exchange `plan_id`s, RDD ids,
+    * object identity hashes (`SQLContext@3d4d0260`), the process id
+    * in IVM temp paths (`graft-ivm-<pid>-…`) and the write-job UUID in
+    * parquet file names. */
+  private def stable(plan: String): String = Masks.foldLeft(plan) { case (s, (re, to)) =>
+    re.replaceAllIn(s, to)
+  }
+
+  private val Masks = Seq(
+    "#\\d+".r -> "#x",
+    "plan_id=\\d+".r -> "plan_id=x",
+    "RDD\\[\\d+\\]".r -> "RDD[x]",
+    "(?<=[A-Za-z0-9_$])@[0-9a-f]{4,8}\\b".r -> "@x",
+    "graft-ivm-\\d+-".r -> "graft-ivm-<pid>-",
+    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r -> "<uuid>")
 
   private def narrative(spark: SparkSession, sfDir: String, out: String): Unit = {
     val sb = new StringBuilder

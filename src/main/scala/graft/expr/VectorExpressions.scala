@@ -30,12 +30,18 @@ object VectorExpressions {
   @inline private def getD(a: ArrayData, isFloat: Boolean, i: Int): Double =
     if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
 
+  /** An element that is null adds nothing, as in [[normalizedOf]]: a
+    * columnar array leaves an undefined value in a null slot, so the
+    * kernels below never read one. */
+  @inline private def getOr0(a: ArrayData, isFloat: Boolean, i: Int): Double =
+    if (a.isNullAt(i)) 0.0 else getD(a, isFloat, i)
+
   /** Called from generated code. */
   def dotOf(a: ArrayData, aFloat: Boolean, b: ArrayData, bFloat: Boolean): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var s = 0.0
     var i = 0
-    while (i < n) { s += getD(a, aFloat, i) * getD(b, bFloat, i); i += 1 }
+    while (i < n) { s += getOr0(a, aFloat, i) * getOr0(b, bFloat, i); i += 1 }
     s
   }
 
@@ -44,7 +50,7 @@ object VectorExpressions {
     var s = 0.0
     var i = 0
     val n = a.numElements()
-    while (i < n) { val x = getD(a, isFloat, i); s += x * x; i += 1 }
+    while (i < n) { val x = getOr0(a, isFloat, i); s += x * x; i += 1 }
     math.sqrt(s)
   }
 
@@ -57,8 +63,8 @@ object VectorExpressions {
     var nb = 0.0
     var i = 0
     while (i < n) {
-      val x = getD(a, aFloat, i)
-      val y = getD(b, bFloat, i)
+      val x = getOr0(a, aFloat, i)
+      val y = getOr0(b, bFloat, i)
       dot += x * y; na += x * x; nb += y * y
       i += 1
     }

@@ -15,9 +15,11 @@ import graft.expr.VectorExpressions.queryVector
   *  - vectors are L2-normalized **at write time**, so search is a plain
   *    dot product (dot ≡ cosine on unit vectors) — no per-row norm
   *    recomputation on the 100 TB read path;
-  *  - top-k is `filter(θ) → orderBy(sim desc) → limit(k)`, which Catalyst
-  *    plans as `TakeOrderedAndProjectExec`: per-partition heap top-k on
-  *    executors, k-way merge on the driver — no global sort, no collect;
+  *  - top-k is `filter(θ) → orderBy(sim desc) → limit(k)`, which a
+  *    collect plans as [[graft.plans.TakeOrderedAndProjectCollectExec]]:
+  *    per-partition heap top-k on executors in one job of plain task
+  *    functions, merge on the driver — no global sort, no collect of
+  *    the index, no per-request closure cleaning;
   *  - all arithmetic is done in double (cast from float) so results are
   *    stable and match the DuckDB oracle bit-for-bit after rounding;
   *  - vectors stay native in the plan: write-time normalization is one
@@ -662,7 +664,9 @@ object VectorIndex {
 
   /** Exact brute-force top-k cosine search. `index` may be raw
     * (`normalizedInput = false`, norms computed on the fly) or
-    * pre-normalized (the scale path). Plans as TakeOrderedAndProject. */
+    * pre-normalized (the scale path). A collect plans it as
+    * [[graft.plans.TakeOrderedAndProjectCollectExec]]: one job of
+    * per-partition heaps, merged on the driver. */
   def search(
       index: DataFrame,
       query: Array[Double],

@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   * keys on the wire) and the folded weight table broadcasts back. The
   * scoring pass rides two bounded shuffles: the (id, bucket) feature
   * pre-aggregation (keys ≤ docs×buckets, compressed map-side) and the
-  * per-doc weight reduction. Selection is a global top-k —
-  * TakeOrderedAndProject (per-partition heaps), not a global sort.
+  * per-doc weight reduction. Selection is a global top-k — a
+  * TakeOrderedAndProject (per-partition heaps; collected, the graft
+  * `TakeOrderedAndProjectCollectExec`), not a global sort.
   * Driver state is the bounded profile only.
   */
 object ImportanceSampling {

@@ -23,8 +23,9 @@ import org.apache.spark.sql.functions._
   *  - for a standing corpus, materialize [[postings]] once (bucketed by
   *    term) and bm25 becomes a bucket-pruned scan of |query| term
   *    partitions;
-  *  - top-k goes through `orderBy(...).limit(k)` →
-  *    TakeOrderedAndProjectExec (per-partition heaps, no global sort);
+  *  - top-k goes through `orderBy(...).limit(k)`, which a collect
+  *    plans as [[graft.plans.TakeOrderedAndProjectCollectExec]]
+  *    (per-partition heaps, no global sort);
   *  - RRF fuses pre-truncated top-n lists, so the fusion window is
   *    O(n·lists), independent of corpus size.
   *
@@ -97,7 +98,8 @@ object TextSearch {
       .agg((sum(col("w_fp")) / fp).as("score"))
   }
 
-  /** Top-k BM25: plans as TakeOrderedAndProjectExec. Ties break on
+  /** Top-k BM25: a collect plans it as
+    * [[graft.plans.TakeOrderedAndProjectCollectExec]]. Ties break on
     * doc id for a deterministic, oracle-stable list. */
   def bm25TopK(
       df: DataFrame,

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.embed.{Embedder, HashingEmbedder}
 import graft.index.VectorIndex
@@ -123,7 +124,26 @@ object Extract {
   /** §3.1 ingest: sections → P7 embed key → 700/200 chunks → embeddings
     * → unit-normalized index rows with denormalized payload (O-DENORM:
     * every row carries document/paragraph/version —
-    * `qdrant_service.py:34-39`). */
+    * `qdrant_service.py:34-39`).
+    *
+    * The result is ONE leaf logical node (`LogicalRDD`, see
+    * `Bridge.asLeaf`) over the ingest's own RDD, not the DOCX →
+    * sections → chunks → embed plan. A caller that persists it caches a
+    * one-node plan, so every query derived from the index analyzes,
+    * explains and posts a plan of constant size instead of re-walking
+    * the ingest's lineage on each request. The lineage stays in the
+    * RDD: nothing is stored, no checkpoint directory is needed, and a
+    * lost (or unpersisted) partition is recomputed. The schema,
+    * nullability and `containsNull` included, is the composed plan's.
+    * What changes against a plain DataFrame:
+    *  - building the leaf runs the ingest's shuffle-map stage (AQE
+    *    materializes its query stages), as `localCheckpoint(eager =
+    *    false)` does; the result stage runs on the first action;
+    *  - a downstream projection or filter no longer prunes the ingest:
+    *    every column is computed;
+    *  - the partition count follows AQE's coalescing of that stage (a
+    *    6 MB index of 40 manuals is 1 partition; the cached composed
+    *    plan kept `spark.sql.shuffle.partitions`). */
   def ingest(
       blocks: DataFrame,
       version: String = "1",
@@ -134,13 +154,13 @@ object Extract {
         Functions.embedKey(col("title"), col("chunk_text")).as("embed_text"),
         col("chunk_text"))
     val embedded = Embedder.embedColumn(chunked, "embed_text", embedder)
-    VectorIndex.withNormalized(embedded)
+    Bridge.asLeaf(VectorIndex.withNormalized(embedded)
       .select(
         Functions.contentId(col("doc_id"), col("sec_id"), col("chunk_idx")).as("id"),
         col("embedding"),
         col("chunk_text").as("text"),
         col("title").as("paragraph_name"),
         col("doc_id").as("document_name"),
-        lit(version).as("document_version"))
+        lit(version).as("document_version")))
   }
 }

@@ -25,8 +25,10 @@ import graft.sources.GraftRelation
   *    zone MAX is strictly below T cannot contribute a top-k row and
   *    is excluded from the scan. On a `clusterBy(c)` layout the global
   *    top-k touches a handful of tail files instead of the corpus; the
-  *    `Sort`+`Limit` stay above the subset scan, so Spark still plans
-  *    its `TakeOrderedAndProject`, just over a sliver of the table.
+  *    `Sort`+`Limit` stay above the subset scan, so the top-k operator
+  *    (a collected root top-k plans as
+  *    [[TakeOrderedAndProjectCollectExec]], other top-k as Spark's
+  *    `TakeOrderedAndProjectExec`) runs over a sliver of the table.
   *    Ascending and explicit null orderings get the mirrored bound;
   *    NULLS FIRST additionally needs every file's exact null count
   *    (the null prefix's size must be known to adjust k) and refuses

@@ -49,8 +49,9 @@ object PipelineQueries {
     * (`test.out.py:14-19`; its θ=0.5 default lives on
     * `VectorIndex.search`; this query uses θ=0.25, the level at which
     * this synthetic corpus has neighbors). Brute-force exact;
-    * `filter → orderBy → limit` plans as TakeOrderedAndProjectExec
-    * (per-partition heaps; no global sort). The single-row parameter
+    * collected `filter → orderBy → limit` plans as
+    * [[graft.plans.TakeOrderedAndProjectCollectExec]] (per-partition
+    * heaps, one job; no global sort). The single-row parameter
     * fetch for the query vector is a driver-side constant, not a data
     * loop. */
   private val knnTop5: Q = (s, d) => {
@@ -2741,7 +2742,8 @@ object PipelineQueries {
     * `ORDER BY n_chars DESC LIMIT 10` over the n_chars-clustered
     * corpus folds the per-file zones against the running 10th bound —
     * files whose max cannot reach it never enter the scan, and the
-    * Sort+Limit above the subset still plan as TakeOrderedAndProject.
+    * Sort+Limit above the subset still plan as a TakeOrderedAndProject
+    * ([[graft.plans.TakeOrderedAndProjectCollectExec]] when collected).
     * At 100 TB "show me the biggest documents" reads a handful of tail
     * files instead of the corpus. The doc_id tiebreak makes the row
     * set unique, so the oracle compares exactly. */

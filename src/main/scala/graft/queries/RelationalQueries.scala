@@ -182,8 +182,9 @@ object RelationalQueries {
       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_qty
       |FROM lineitem ORDER BY l_suppkey, l_orderkey, l_linenumber""".stripMargin
 
-  // q09: global top-k — Catalyst fuses orderBy+limit into
-  // TakeOrderedAndProjectExec (per-partition heaps, no global sort).
+  // q09: global top-k — orderBy+limit plans as a TakeOrderedAndProject
+  // (per-partition heaps, no global sort): when collected, the graft
+  // TakeOrderedAndProjectCollectExec; under a write, Spark's exec.
   private val q09: Q = (s, d) =>
     Tables.orders(s, d)
       .select("o_orderkey", "o_totalprice")

@@ -31,6 +31,18 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** `df` as one leaf logical node (`LogicalRDD`, the leaf
+    * `Dataset.checkpoint` returns, without the checkpoint) over the RDD
+    * its executed plan produces. Building the RDD runs the plan's
+    * adaptive query stages (its shuffle-map stages); the result stage
+    * runs on the leaf's first action. The lineage stays in the RDD, so
+    * a lost partition is recomputed, and nothing is stored. The schema,
+    * nullability included, is `df.schema`. (`internalCreateDataFrame`
+    * went `private[sql]` with the Connect split.) */
+  def asLeaf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(df.queryExecution.toRdd, df.schema)
+
   /** Drain the Spark listener bus (`private[spark]` in core) — lets
     * tests make listener-based assertions deterministic instead of
     * sleeping. Bounded wait: a wedged listener should fail the test

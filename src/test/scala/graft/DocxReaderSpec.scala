@@ -3,7 +3,14 @@ package graft
 import java.io.ByteArrayOutputStream
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.functions._
+
+import graft.embed.{Embedder, HashingEmbedder}
+import graft.index.VectorIndex
 import graft.ingest.DocxReader
+import graft.ops.{ChunkText, Functions}
 import graft.pipeline.Extract
 
 /** S1 + the §3.2 extractor path on a synthetic in-memory DOCX package. */
@@ -210,5 +217,56 @@ class DocxReaderSpec extends SparkSpec {
     val names = idx.select("paragraph_name").distinct().as[String].collect().toSet
     assert(names == Set("Installation", "Configuration"))
     assert(idx.select("document_version").distinct().as[String].head() == "15.0")
+  }
+
+  /** The ingest as the composed DOCX → sections → chunks → embed plan,
+    * built from the same public steps `Extract.ingest` runs. */
+  private def composedIngest(blocks: DataFrame, version: String, embedder: HashingEmbedder) = {
+    val chunked = ChunkText.explodeChunks(Extract.sections(blocks), "text")
+      .select(col("doc_id"), col("sec_id"), col("title"), col("chunk_idx"),
+        Functions.embedKey(col("title"), col("chunk_text")).as("embed_text"),
+        col("chunk_text"))
+    VectorIndex.withNormalized(Embedder.embedColumn(chunked, "embed_text", embedder))
+      .select(
+        Functions.contentId(col("doc_id"), col("sec_id"), col("chunk_idx")).as("id"),
+        col("embedding"), col("chunk_text").as("text"), col("title").as("paragraph_name"),
+        col("doc_id").as("document_name"), lit(version).as("document_version"))
+  }
+
+  test("ingest is one plan leaf with the composed plan's rows and schema") {
+    val blocks = DocxReader.parseBytes("manual.docx", pkg).toDS().toDF()
+    val idx = Extract.ingest(blocks, version = "15.0", embedder = HashingEmbedder(64))
+    val analyzed = idx.queryExecution.analyzed
+    assert(analyzed.children.isEmpty, analyzed.treeString)
+    val composed = composedIngest(blocks, "15.0", HashingEmbedder(64))
+    assert(idx.schema == composed.schema)
+    assert(idx.collect().toSeq == composed.collect().toSeq)
+  }
+
+  test("a search over the persisted ingest explains at a size that ignores the ingest plan") {
+    // the same manual under 1 and 12 names, the latter as a 12-way union
+    val one = DocxReader.parseBytes("manual.docx", pkg).toDS().toDF()
+    val twelve = (1 to 12).map(i => DocxReader.parseBytes(s"manual$i.docx", pkg).toDS().toDF())
+      .reduce(_ union _)
+    val q = HashingEmbedder(64).embed("configure the server").map(_.toDouble)
+    val sizes = Seq(one, twelve).map { blocks =>
+      val idx = Extract.ingest(blocks, embedder = HashingEmbedder(64)).persist()
+      try {
+        val search = VectorIndex.search(idx, q, k = 5, threshold = 0.0)
+        assert(search.collect().nonEmpty)
+        search.queryExecution.explainString(FormattedMode).length
+      } finally idx.unpersist(blocking = true)
+    }
+    assert(sizes.forall(_ < 4000), s"formatted explain sizes $sizes")
+    assert(math.abs(sizes(0) - sizes(1)) < 40, s"formatted explain sizes $sizes")
+  }
+
+  test("after unpersist, a second action on the ingest recomputes it") {
+    val blocks = DocxReader.parseBytes("manual.docx", pkg).toDS().toDF()
+    val idx = Extract.ingest(blocks, embedder = HashingEmbedder(64)).persist()
+    val first = idx.collect().toSeq
+    idx.unpersist(blocking = true)
+    assert(idx.collect().toSeq == first)
+    assert(idx.count() == first.size)
   }
 }

@@ -73,8 +73,9 @@ class EmbedderSpec extends SparkSpec {
       "text", HashingEmbedder(64))
     val index = VectorIndex.withNormalized(df)
     val q = HashingEmbedder(64).embed("document number 7 content").map(_.toDouble)
-    val plan = VectorIndex.search(index, q, k = 5, threshold = 0.0, normalizedInput = true)
-      .queryExecution.executedPlan.toString
+    val top = VectorIndex.search(index, q, k = 5, threshold = 0.0, normalizedInput = true)
+    val plan = top.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), s"unexpected plan:\n$plan")
+    assert(globalSortsAndGathers(top).isEmpty, s"global sort or gather in:\n$plan")
   }
 }

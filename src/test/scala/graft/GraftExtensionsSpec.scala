@@ -57,6 +57,13 @@ class GraftExtensionsSpec extends SparkSpec {
         .map(row => (row.getLong(0), if (row.isNullAt(1)) None else Some(row.getLong(1))))
         .toSet
       assert(got === Set((1L, Some(95L)), (2L, None)))
+
+      // the injected top-k strategy plans a collected ORDER BY + LIMIT
+      assert(!injected.experimental.extraStrategies.contains(graft.plans.TopKCollectStrategy))
+      val top = injected.range(0, 20, 1, 3).orderBy(org.apache.spark.sql.functions.col("id").desc)
+        .limit(3)
+      assert(top.queryExecution.executedPlan.toString.contains("TakeOrderedAndProjectCollect"))
+      assert(top.as[Long].collect().toSeq == Seq(19L, 18L, 17L))
     } finally {
       SparkSession.setDefaultSession(base)
       SparkSession.setActiveSession(base)

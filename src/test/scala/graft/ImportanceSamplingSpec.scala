@@ -60,9 +60,10 @@ class ImportanceSamplingSpec extends SparkSpec {
   }
 
   test("selection plans as TakeOrderedAndProject, profile join broadcasts") {
-    val plan = ImportanceSampling.sample(corpus, col("grp") === "t", k = 5)
-      .queryExecution.executedPlan.toString
+    val sample = ImportanceSampling.sample(corpus, col("grp") === "t", k = 5)
+    val plan = sample.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan.take(400))
+    assert(globalSortsAndGathers(sample).isEmpty, s"global sort or gather in:\n$plan")
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
       "bounded profile/constant must broadcast")
   }

@@ -155,6 +155,44 @@ class NativeVectorSpec extends SparkSpec {
     }
   }
 
+  test("dot, l2 norm and cosine skip null elements, whatever the plan reads them from") {
+    // a null element adds nothing, so each row scores as its null-as-zero
+    // twin. The rows with nulls follow one full 4096-row reader batch in a
+    // single parquet file, so their null slots sit where the vectorized
+    // reader's reused column vector still holds the first batch's values.
+    val filler = (1000 until 1000 + 4096).map(i =>
+      (i, Seq(Some(1.5), Some(7.0), Some(-2.0)), Seq(Some(0.5), Some(1.0), Some(3.0))))
+    val rows: Seq[(Int, Seq[Option[Double]], Seq[Option[Double]])] = filler ++ Seq(
+      (1, Seq(Some(1.5), None, Some(-2.0)), Seq(Some(1.0), Some(7.0), Some(1.0))),
+      (2, Seq(Some(2.0), Some(4.0), None), Seq(None, Some(0.5), Some(3.0))),
+      (3, Seq(None, None), Seq(Some(1.0), Some(1.0))),
+      (4, Seq(Some(3.0), Some(4.0)), Seq(Some(4.0), Some(-3.0))))
+    val want = rows.map { case (i, a, b) =>
+      val (x, y) = (a.map(_.getOrElse(0.0)), b.map(_.getOrElse(0.0)))
+      val dot = x.zip(y).map { case (p, q) => p * q }.sum
+      val (nx, ny) = (math.sqrt(x.map(v => v * v).sum), math.sqrt(y.map(v => v * v).sum))
+      i -> (dot, nx, if (nx * ny == 0.0) 0.0 else dot / (nx * ny))
+    }.toMap
+    assert(want(1)._2 == 2.5)
+    val doubles = rows.toDF("i", "a", "b")
+    val floats = doubles.select(col("i"),
+      col("a").cast("array<float>").as("a"), col("b").cast("array<float>").as("b"))
+    for ((kind, df) <- Seq("double" -> doubles, "float" -> floats);
+         (source, in) <- Seq("local" -> df, "parquet" -> parquet(df.coalesce(1)))) {
+      val got = in.select(col("i"),
+        VectorIndex.dot(col("a"), col("b")), VectorIndex.l2Norm(col("a")),
+        VectorIndex.cosine(col("a"), col("b")))
+        .as[(Int, Double, Double, Double)].collect()
+      assert(got.length == rows.size)
+      got.foreach { case (i, dot, norm, cos) =>
+        val (wd, wn, wc) = want(i)
+        assert(math.abs(dot - wd) < 1e-12 && math.abs(norm - wn) < 1e-12 &&
+          math.abs(cos - wc) < 1e-12,
+          s"$kind/$source row $i: got ($dot, $norm, $cos) want ($wd, $wn, $wc)")
+      }
+    }
+  }
+
   test("Extract.ingest and StreamingIngest keep their output schemas") {
     val embedding = StructField("embedding", ArrayType(DoubleType, containsNull = true), nullable = true)
     val blocks = Seq(
