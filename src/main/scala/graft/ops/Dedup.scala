@@ -498,9 +498,7 @@ object Dedup {
     * a driver-side convergence loop (the standard Spark formulation;
     * GraphX does the same under the hood). Each vertex adopts the
     * minimum component id among itself and its neighbors until no label
-    * changes. `localCheckpoint` cuts the growing lineage each round —
-    * without it the plan doubles per iteration and the job dies on plan
-    * size long before data size matters. Returns `(id, comp)`.
+    * changes. Returns `(id, comp)`.
     *
     * Iterations needed = graph diameter; near-dup clusters are shallow
     * (a dup of a dup of a dup…), so the default cap is generous — and
@@ -513,26 +511,24 @@ object Dedup {
   def connectedComponents(
       pairs: DataFrame, maxIter: Int = 15,
       maxDriverEdges: Long = DriverCcMaxEdges): DataFrame = {
-    // materialize the edge list once — `pairs` may be an expensive LSH
-    // plan, and the loop would otherwise recompute it every iteration
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint()
+    // `pairs` may be an expensive LSH plan, and every round reads the
+    // edge list
+    val edges = Checkpointing.shared(
+      pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     val driverCc = driverUnionFind(edges, maxDriverEdges)
     if (driverCc.isDefined) return driverCc.get
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint()
+    var labels = Checkpointing.shared(edges.select(col("src").as("id")).distinct()
+      .withColumn("comp", col("id")))
     var changed = true
     var i = 0
     while (changed && i < maxIter) {
       val prop = edges.join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("comp"))
-      // lazy: the change-detection count materializes the checkpoint
-      // in the same job (see the alternating variant below)
-      val next = labels.unionAll(prop)
-        .groupBy("id").agg(min("comp").as("comp"))
-        .localCheckpoint(eager = false)
+      // truncated: the plan would double each round; lazily, so the
+      // change-detection count below writes it in the same job
+      val next = Checkpointing.truncateLazy(labels.unionAll(prop)
+        .groupBy("id").agg(min("comp").as("comp")), None)
       changed = next.join(labels.withColumnRenamed("comp", "old_comp"), "id")
         .filter(col("comp") =!= col("old_comp"))
         .limit(1).count() > 0
@@ -561,14 +557,14 @@ object Dedup {
     * unchanged. */
   private[graft] val DriverCcMaxEdges: Long = 4L * 1024 * 1024
 
-  /** Driver union-find over a materialized (src, dst) edge list, if it
-    * is within [[DriverCcMaxEdges]] (`edges` MUST be checkpointed —
-    * the count and collect would otherwise recompute the pair plan
-    * twice). Returns the same `(id, comp = min member id)` frame as
-    * the distributed fixpoints: one row per node appearing in any
-    * edge, component representative = minimum id under the id type's
-    * natural order (the `least`/`min` order the distributed paths
-    * use). Path-compressed + size-united: O(E α(E)). */
+  /** Driver union-find over a (src, dst) edge list, if it is within
+    * [[DriverCcMaxEdges]] (`edges` MUST be computed once — the count
+    * and collect would otherwise run the pair plan twice). Returns the
+    * same `(id, comp = min member id)` frame as the distributed
+    * fixpoints: one row per node appearing in any edge, component
+    * representative = minimum id under the id type's natural order
+    * (the `least`/`min` order the distributed paths use).
+    * Path-compressed + size-united: O(E α(E)). */
   private def driverUnionFind(
       edges: DataFrame, maxEdges: Long): Option[DataFrame] = {
     if (edges.count() > maxEdges) return None
@@ -655,24 +651,20 @@ object Dedup {
         .filter(col("src") =!= col("dst"))
         .distinct()
     }
-    var edges = pairs
+    var edges = Checkpointing.shared(pairs
       .select(greatest(col("id_a"), col("id_b")).as("src"),
         least(col("id_a"), col("id_b")).as("dst"))
       .filter(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     val driverCc = driverUnionFind(edges, maxDriverEdges)
     if (driverCc.isDefined) return driverCc.get
     var converged = false
     var r = 0
     while (!converged && r < maxRounds) {
-      // LAZY checkpoint: the convergence count below is the round's
-      // only action, so it materializes (and caches) `next` in the
-      // same job — an eager checkpoint here doubled the round's job
-      // count, and the fixpoint's wall is sequential-job-bound, not
-      // task-bound (round-16 ask #1 plan audit)
-      val next = star(star(edges, large = true), large = false)
-        .localCheckpoint(eager = false)
+      // truncated: the plan would grow each round; lazily, so the
+      // convergence count below writes it in the same job
+      val next = Checkpointing.truncateLazy(
+        star(star(edges, large = true), large = false), None)
       // fixpoint: the (canonicalized) edge set stopped changing
       converged = next.exceptAll(edges).unionAll(edges.exceptAll(next))
         .limit(1).count() == 0

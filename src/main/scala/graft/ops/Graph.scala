@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * computed on the (rank ⋈ edges-by-src) side and hash-aggregated by
   * `dst` with map-side combine; the edge list and out-degree table are
   * computed once, persisted, and reused every round. Lineage is
-  * truncated per round with `localCheckpoint` so the analyzed plan
+  * truncated per round ([[Checkpointing.truncateLazy]]) so the analyzed plan
   * stays constant-size across iterations (the same discipline as the
   * BPE / PQ-Lloyd trainers — see memory: iterative loops OOM the
   * driver otherwise). The dangling-mass term is a 1-row aggregate
@@ -107,7 +107,8 @@ object Graph {
         else Map.empty)
     val eSized: DataFrame =
       if (sized eq spark) eRaw
-      else org.apache.spark.sql.graft.PlanPorts.inSession(sized, eRaw)
+      else org.apache.spark.sql.graftbridge.Bridge.ofRows(
+        sized, eRaw.queryExecution.analyzed)
     locally {
       val e = eSized.repartition(p, col("src")).persist()
       val nodes = e.select(col("src").as("node"))

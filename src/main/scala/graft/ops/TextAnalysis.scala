@@ -330,12 +330,9 @@ object TextAnalysis {
       df.select(col(idCol).as("id"), col(langCol).as("lang"),
         col(textCol).as("__text")), col("id"))
     // triCounts feeds BOTH the per-language profile and the scoring
-    // join; without a barrier each consumer re-runs the count derive.
-    // localCheckpoint materializes it once per execution — per-run
-    // state, nothing persists across runs.
-    val triCounts = base.select(col("id"), col("lang"),
-        explode(triCountsUdf(Dedup.normalizedText(col("__text")))).as(Seq("tri", "c")))
-      .localCheckpoint()
+    // join; each would otherwise re-run the count derive
+    val triCounts = Checkpointing.shared(base.select(col("id"), col("lang"),
+        explode(triCountsUdf(Dedup.normalizedText(col("__text")))).as(Seq("tri", "c"))))
     val profile = triCounts.groupBy("lang", "tri").agg(sum(col("c")).as("cnt"))
     val langTot = profile.groupBy("lang").agg(sum(col("cnt")).as("tot"))
     val vocabDf = profile.agg(countDistinct(col("tri")).as("vv"))

@@ -16,33 +16,20 @@ import org.apache.spark.sql.{Column, DataFrame}
   * back-to-back jobs; `doc_dup_passages` its winnow+group subtree as a
   * 5.8 s sample job then a 10.1 s sort job.
   *
-  * Round 17 fixed the double computation with
-  * `repartition(1).sortWithinPartitions` — compute once, gather, sort
-  * locally. That removed the re-run but replaced the distributed sort
-  * with a SINGLE-PARTITION funnel, a local-mode assumption: several
-  * call sites emit one row per document (`doc_langid`,
-  * `doc_dup_passages`, `dedup_simhash_pairs`, …), i.e. O(corpus) rows
-  * at 100 TB serialized through one task — and even at sf0.1 the
-  * funnel's one-task sort + the keyless repartition's
-  * sort-before-repartition pass REGRESSED `dedup_simhash_pairs`
-  * 1.38 → 1.79 s banked (8→32-core ratio 0.50: slower with MORE
-  * cores — the single-task signature).
-  *
-  * This version keeps both properties: a LAZY `localCheckpoint` marks
-  * the child for persistence, the range sampler's job computes it ONCE
-  * (populating the cache as a side effect of that first pass), and the
-  * sort's shuffle then reads the cached blocks — the child never runs
-  * twice, and the sort itself stays a distributed range sort whose
-  * parallelism scales with the result (guide §2.4/§5). Row set and
-  * total order are identical to `orderBy` (every caller's sort key is
-  * total — oracle hash comparison already requires that). The
-  * checkpoint is per-execution state inside the timed region — nothing
-  * persists across runs.
+  * Gathering to one partition first (`repartition(1)
+  * .sortWithinPartitions`) also runs the child once, but funnels
+  * O(corpus) rows (`doc_langid`, `doc_dup_passages`, …) through one
+  * task: slower with more cores. Here the child is a
+  * [[Checkpointing.shared]] frame: the range sampler's job fills its
+  * blocks, the sort's shuffle reads them, and the sort stays a
+  * distributed range sort. Row set and total order are identical to
+  * `orderBy` (every caller's sort key is total — oracle hash
+  * comparison already requires that).
   */
 object TotalSort {
 
   def small(df: DataFrame, cols: Column*): DataFrame =
-    df.localCheckpoint(eager = false).orderBy(cols: _*)
+    Checkpointing.shared(df).orderBy(cols: _*)
 
   def small(df: DataFrame, col1: String, colRest: String*): DataFrame =
     small(df, (col1 +: colRest).map(df.col): _*)

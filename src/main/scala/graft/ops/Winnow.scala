@@ -200,16 +200,12 @@ object Winnow {
       df: DataFrame, textCol: String = "text", idCol: String = "doc_id",
       k: Int = 16, w: Int = 8, scanLocal: Boolean = false): DataFrame = {
     // The fingerprint set feeds THREE consumers (the per-fp frequency
-    // count, the per-doc join side, and through it the reassembly) —
-    // compute it once via a lazy checkpoint. With the window shape's
-    // exchange now BEFORE the explode (fewer shuffled bytes, full
-    // width), exchange reuse alone would no longer share the
-    // explode+hash work between consumers; the checkpoint does.
-    // Per-execution state only — nothing persists across runs.
-    val fps =
-      (if (scanLocal) fingerprintsScan(df, textCol, idCol, k, w)
-       else fingerprints(df, textCol, idCol, k, w))
-        .localCheckpoint(eager = false)
+    // count, the per-doc join side, and through it the reassembly).
+    // The window shape's exchange sits BEFORE the explode, so exchange
+    // reuse alone would not share the explode+hash work between them.
+    val fps = Checkpointing.shared(
+      if (scanLocal) fingerprintsScan(df, textCol, idCol, k, w)
+      else fingerprints(df, textCol, idCol, k, w))
     val counts = fps.groupBy("fp").agg(countDistinct(col(idCol)).as("nd"))
     val perDoc = fps.join(counts, "fp")
       .groupBy(col(idCol))

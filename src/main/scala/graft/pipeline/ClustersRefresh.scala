@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Dedup
+import graft.ops.{Checkpointing, Dedup}
 
 /** Incremental near-duplicate CLUSTER maintenance — connected
   * components over the similarity-pair graph as a standing view,
@@ -152,14 +152,14 @@ object ClustersRefresh {
       spark, corpusDir, fromVersion, toVersion)
     val oldAssign = readAssign(s, clustersDir, fromVersion)
     val oldEdges = readEdges(s, clustersDir, fromVersion)
-    val changedIds = MergeTable
+    // both are read by three joins below, and neither plan is free
+    val changedIds = Checkpointing.shared(MergeTable
       .rowDeltas(s, corpusDir, fromVersion, toVersion, "doc_id")
-      .select("doc_id").distinct()
-      .localCheckpoint() // used by three joins below; the delta join is not free
+      .select("doc_id").distinct())
 
     val corpus2 = MergeTable.read(s, corpusDir, toVersion)
-    val newPairs = restrictedPairs(corpus2, changedIds, threshold)
-      .localCheckpoint() // reused thrice below; the plan is expensive
+    val newPairs =
+      Checkpointing.shared(restrictedPairs(corpus2, changedIds, threshold))
 
     val keptEdges = oldEdges
       .join(changedIds.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_anti")

@@ -137,8 +137,8 @@ object Extract {
     * nullability and `containsNull` included, is the composed plan's.
     * What changes against a plain DataFrame:
     *  - building the leaf runs the ingest's shuffle-map stage (AQE
-    *    materializes its query stages), as `localCheckpoint(eager =
-    *    false)` does; the result stage runs on the first action;
+    *    materializes its query stages), as `Checkpointing.shared`
+    *    does; the result stage runs on the first action;
     *  - a downstream projection or filter no longer prunes the ingest:
     *    every column is computed;
     *  - the partition count follows AQE's coalescing of that stage (a

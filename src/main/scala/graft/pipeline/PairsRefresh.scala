@@ -75,10 +75,10 @@ object PairsRefresh {
     // family's standard entry)
     val s = graft.ops.SizedSession.forDelta(
       spark, corpusDir, fromVersion, toVersion)
-    val changed = MergeTable
+    // probes the pairs table twice + the index once
+    val changed = graft.ops.Checkpointing.shared(MergeTable
       .rowDeltas(s, corpusDir, fromVersion, toVersion, "doc_id")
-      .select("doc_id").distinct()
-      .localCheckpoint() // probes the pairs table twice + the index once
+      .select("doc_id").distinct())
 
     // stale: standing pairs touching a changed doc — delete by pk.
     // One pass over the pairs table; deletes of keys the fresh side

@@ -7,7 +7,7 @@ import graft.Tables
 import graft.embed.{Embedder, HashingEmbedder}
 import graft.expr.VectorExpressions
 import graft.index.VectorIndex
-import graft.ops.{ChunkText, Dedup, ImportanceSampling, Packing, PairAssets, Sectionize, TextAnalysis, TextSanitize, TextSearch, UniqueNames}
+import graft.ops.{Checkpointing, ChunkText, Dedup, ImportanceSampling, Packing, PairAssets, Sectionize, TextAnalysis, TextSanitize, TextSearch, UniqueNames}
 
 /** Pipeline / north-star queries: vector search (the reference's flagship
   * path, `scripts/test.out.py:14-19`), the dedup family, text analysis,
@@ -2102,7 +2102,7 @@ object PipelineQueries {
     // the fixture builds the index inline (a standing deployment reads
     // the maintained table — doc_substring_incremental); materialize it
     // once so the three pattern branches don't re-trigram the corpus
-    val idx = TextSearch.trigramPostings(docs).localCheckpoint()
+    val idx = Checkpointing.shared(TextSearch.trigramPostings(docs))
     Seq("merge slow", "w sort", "dup").map { p =>
       TextSearch.substringSearch(docs, idx, p).withColumn("pattern", lit(p))
     }.reduce(_ unionByName _)

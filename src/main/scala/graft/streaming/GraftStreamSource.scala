@@ -164,7 +164,7 @@ private[graft] class GraftStreamSource(
     // align column order to the declared schema, then re-tag as a
     // streaming frame (MicroBatchExecution rejects a batch-tagged one)
     val aligned = batch.select(schema.fieldNames.map(col).toSeq: _*)
-    org.apache.spark.sql.graft.StreamingFrames.streaming(
+    org.apache.spark.sql.graftbridge.Bridge.streaming(
       spark, aligned.queryExecution.toRdd, aligned.schema)
   }
 

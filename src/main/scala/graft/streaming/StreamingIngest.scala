@@ -7,7 +7,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.embed.{Embedder, HashingEmbedder}
 import graft.index.VectorIndex
 import graft.ingest.DocxReader
-import graft.ops.ChunkText
+import graft.ops.{Checkpointing, ChunkText}
 
 /** ST1 — streaming ingestion. The reference ingests per HTTP request
   * (`scripts/app.py:17-45`): each uploaded document is parsed → chunked →
@@ -119,13 +119,13 @@ object StreamingIngest {
             .filter(col("batch_id") =!= batchId) // not a crashed attempt of us
             .select("content_hash").distinct())
           catch { case _: org.apache.spark.sql.AnalysisException => None }
-        // localCheckpoint (eager) cuts the lineage BEFORE the corpus
-        // write: the anti-join must not re-execute against the corpus
-        // it just grew, or the index write would see its own batch as
-        // already-ingested and drop it
-        val fresh = memory
-          .fold(inBatch)(m => inBatch.join(m, Seq("content_hash"), "left_anti"))
-          .localCheckpoint(true)
+        // truncated eagerly, BEFORE the corpus write: a recompute of the
+        // anti-join against the corpus it just grew would see this
+        // batch as already ingested and silently drop it; a lost
+        // truncated block fails loudly instead
+        val fresh = Checkpointing.truncate(
+          memory.fold(inBatch)(m => inBatch.join(m, Seq("content_hash"), "left_anti")),
+          None)
         fresh.select("doc_id", "content_hash", "text")
           .write.mode("overwrite").parquet(s"$corpusDir/batch_id=$batchId")
         ingestBatch(fresh.select("doc_id", "text"), embedder)

@@ -16,11 +16,13 @@ class CheckpointModeSpec extends SparkSpec {
     d.toString
   }
 
+  // ring + chords + a dangling sink, enough structure for 6 rounds
+  private def ring = (Seq.tabulate(40)(i => (i.toLong, ((i + 1) % 40).toLong)) ++
+    Seq((0L, 20L), (5L, 25L), (10L, 30L), (3L, 41L))) // 41 is dangling
+    .toDF("src", "dst")
+
   test("pageRank: reliable checkpoint produces bit-identical ranks") {
-    // ring + chords + a dangling sink, enough structure for 6 rounds
-    val edges = Seq.tabulate(40)(i => (i.toLong, ((i + 1) % 40).toLong)) ++
-      Seq((0L, 20L), (5L, 25L), (10L, 30L), (3L, 41L)) // 41 is dangling
-    val df = edges.toDF("src", "dst")
+    val df = ring
     val local = Graph.pageRank(df, iterations = 6)
       .as[(Long, Long)].collect().toMap
     val reliable = Graph.pageRank(df, iterations = 6,
@@ -28,6 +30,15 @@ class CheckpointModeSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(reliable == local)
     assert(local.nonEmpty)
+  }
+
+  test("pageRank: a reliable checkpoint dir is set once, not once per round") {
+    // the context keeps checkpoints under <dir>/<uuid>; re-pointing it
+    // at the same dir every round would make a uuid dir per call
+    val d = tmpDir("once")
+    Graph.pageRank(ring, iterations = 6, checkpointDir = Some(d)).collect()
+    val made = new java.io.File(d).listFiles().filter(_.isDirectory)
+    assert(made.length == 1, made.map(_.getName).mkString(", "))
   }
 
   test("BPE train: reliable checkpoint learns the identical merge list") {

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.StreamingFrames
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.pipeline.MergeTable
@@ -276,7 +277,7 @@ class GraftStreamSourceSpec extends SparkSpec {
     // base makes the replay return exactly those changes.
     val replayed = mkSource().getBatch(None,
       org.apache.spark.sql.execution.streaming.runtime.LongOffset(2L))
-    val rows = org.apache.spark.sql.graft.StreamingFrames.asBatch(replayed)
+    val rows = StreamingFrames.asBatch(replayed)
     assert(rows.count() == 1L,
       "the batch-0 recovery replay must deliver the (base, loggedEnd] changes")
   }
