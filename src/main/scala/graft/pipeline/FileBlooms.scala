@@ -1,13 +1,14 @@
 package graft.pipeline
 
-import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.sketch.BloomFilter
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.DataType
 
 import graft.expr.BloomExpr
 
@@ -24,8 +25,8 @@ import graft.expr.BloomExpr
   * wire). A probe for `col IN (v₁…vₙ)` then skips every file whose
   * sketch rejects ALL probe values, BEFORE any scan task launches.
   * False positives only cost a read; a false negative is impossible, so
-  * pruning is a superset pass and [[MergeTable.readWhereEq]]-style
-  * consumers stay exact under any layout. Files without a sketch (a
+  * pruning is a superset pass and [[readWhereEq]]-style consumers stay
+  * exact under any layout. Files without a sketch (a
   * pre-index version, a column added later) are never skipped — absence
   * of evidence never prunes, the [[ZoneMaps]] rule.
   *
@@ -165,67 +166,47 @@ object FileBlooms {
     val f = fs(spark, dir)
     val p = sidecarPath(dir, v, column)
     if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        new String(bos.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-      Some(text.split("\n").toSeq.filter(_.nonEmpty).map { l =>
-        val a = l.split("\t", -1)
-        require(a.length == 2, s"corrupt blooms line: ${l.take(80)}")
-        a(0) -> Base64.getDecoder.decode(a(1))
-      }.toMap)
-    }
+    else Some(MergeTable.readText(f, p).split("\n").toSeq.filter(_.nonEmpty).map { l =>
+      val a = l.split("\t", -1)
+      require(a.length == 2, s"corrupt blooms line: ${l.take(80)}")
+      a(0) -> Base64.getDecoder.decode(a(1))
+    }.toMap)
   }
 
   /** The file-skipping decision for `column IN (values)` at `version`:
     * (files kept, total files). A file survives when its sketch might
-    * contain ANY probe value — or when it has no sketch. Probe values
-    * hash through the SAME Spark expression the build used
-    * (`xxhash64` at the column's table type), so engine and sidecar
-    * can never disagree on a hash. */
+    * contain ANY probe value — or when it has no sketch. */
   def prunedFilesEq(
       spark: SparkSession, dir: String, column: String, values: Seq[Any],
-      version: Int = -1): (Seq[String], Int) = {
-    require(values.nonEmpty, "empty probe set")
-    val v = if (version > 0) version else MergeTable.latestVersion(spark, dir)
-    val rel = MergeTable.fileIndex(spark, dir, v).values.flatten.toSeq.sorted
-    read(spark, dir, column, v) match {
-      case None => (rel, rel.size) // unindexed — never skip
+      version: Int = -1): (Seq[String], Int) =
+    MergeTable.snapshot(spark, dir, version).pruned(MergeTable.EqBound(column, values))
+
+  /** The keep function of `column IN (values)` against `s`'s sidecar
+    * (keep-all while the column is unindexed). */
+  private[pipeline] def keepEq(
+      s: MergeTable.Snapshot, column: String, values: Seq[Any]): String => Boolean =
+    s.blooms(column) match {
+      case None => _ => true
       case Some(sketches) =>
-        val dt = MergeTable.read(spark, dir, v).schema(column).dataType
-        val hashes = spark.range(1).select(
-          values.zipWithIndex.map { case (pv, i) =>
-            xxhash64(lit(pv).cast(dt)).as(s"h$i") }: _*).head()
-        val probe = values.indices.map(hashes.getLong)
-        val kept = rel.filter { r =>
-          sketches.get(r) match {
-            case None => true
-            case Some(bytes) =>
-              val bf = BloomFilter.readFrom(new ByteArrayInputStream(bytes))
-              probe.exists(bf.mightContainLong)
-          }
-        }
-        (kept, rel.size)
+        val dt = s.schema(column).dataType
+        val probe = values.map(probeHash(_, dt))
+        r => sketches.get(r).forall(bf => probe.exists(bf.mightContainLong))
     }
-  }
+
+  /** A probe value's sketch hash, evaluated on the driver through the
+    * SAME expression the build used — `xxhash64` of the value cast to
+    * the column's table type `dt`, in the session time zone — so engine
+    * and sidecar can never disagree on a hash. */
+  private[graft] def probeHash(v: Any, dt: DataType): Long =
+    new XxHash64(Seq(Cast(Literal(v), dt, Some(SQLConf.get.sessionLocalTimeZone))))
+      .eval().asInstanceOf[Long]
 
   /** Bloom-pruned equality scan: read only the files whose sketch
     * might hold one of `values`, then apply the exact predicate —
     * exact under any layout or sidecar presence (the
-    * [[MergeTable.readWhere]] contract for point lookups). */
+    * [[MergeTable.readWhereBounds]] contract for point lookups). */
   def readWhereEq(
       spark: SparkSession, dir: String, column: String, values: Seq[Any],
-      version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else MergeTable.latestVersion(spark, dir)
-    val (kept, _) = prunedFilesEq(spark, dir, column, values, v)
-    val pred: Column = col(column).isin(values: _*)
-    if (kept.isEmpty) MergeTable.read(spark, dir, v).filter(pred).limit(0)
-    else MergeTable.applyDeletes(spark, dir, v,
-      MergeTable.readRel(spark, dir, kept).filter(pred))
-  }
+      version: Int = -1): DataFrame =
+    MergeTable.readWhereBounds(spark, dir, Seq(MergeTable.EqBound(column, values)), version)
 }

@@ -1,11 +1,15 @@
 package graft.pipeline
 
+import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Copy-on-write MERGE (upsert/delete), time travel and compaction over
   * hash-bucketed parquet — the transactional-lakehouse core (the public
@@ -165,17 +169,15 @@ object MergeTable {
       dvKey: Option[String] = None, key: Option[String] = None,
       sinkBatch: Option[Long] = None, sinkApp: Option[String] = None)
 
+  /** A small metadata file (manifest, sidecar, constraints) as UTF-8 text. */
+  private[pipeline] def readText(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
+  }
+
   private def readManifest(spark: SparkSession, dir: String, v: Int): Manifest = {
-    val f = fs(spark, dir)
-    val in = f.open(manifestPath(dir, v))
-    val text = try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      new String(bos.toByteArray, StandardCharsets.UTF_8)
-    } finally in.close()
-    val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+    val lines = readText(fs(spark, dir), manifestPath(dir, v))
+      .split("\n").toSeq.filter(_.nonEmpty)
     val header = lines.head.split("\t")
     require(header(0) == "#nbuckets", s"corrupt manifest _v$v at $dir")
     // later '#'-prefixed lines are metadata headers (e.g. "#op\t<op>");
@@ -547,19 +549,21 @@ object MergeTable {
     * the evolved schema and nulls in the new columns; the pinned
     * schema is then applied explicitly, which skips the per-call
     * inference job on every re-read. */
-  private def readFiles(spark: SparkSession, files: Seq[String]): DataFrame = {
-    val key = files.sorted
-    val schema = fileSchemaCache.computeIfAbsent(key, _ =>
+  private def readFiles(spark: SparkSession, files: Seq[String]): DataFrame =
+    spark.read
+      .option("recursiveFileLookup", "true")
+      .schema(filesSchema(spark, files))
+      .parquet(files: _*)
+
+  /** The merged footer schema [[readFiles]] pins for `files`. */
+  private def filesSchema(
+      spark: SparkSession, files: Seq[String]): StructType =
+    fileSchemaCache.computeIfAbsent(files.sorted, _ =>
       driverFooterSchema(spark, files).getOrElse(
         spark.read
           .option("recursiveFileLookup", "true")
           .option("mergeSchema", "true")
           .parquet(files: _*).schema))
-    spark.read
-      .option("recursiveFileLookup", "true")
-      .schema(schema)
-      .parquet(files: _*)
-  }
 
   /** Driver-side schema for a SMALL file list whose footers all embed
     * the IDENTICAL Spark schema: every file this table writes carries
@@ -623,11 +627,11 @@ object MergeTable {
       sinkApp = sinkApp.filter(_ => sinkBatch.isDefined)))
   }
 
-  /** Read a specific rel-path subset of a version's files — the scan
-    * behind sidecar-pruned reads ([[readWhere]], [[FileBlooms]]). Does
-    * NOT apply pending merge-on-read deletes (no version context);
-    * callers with a version use [[applyDeletes]] on the result. */
-  private[graft] def readRel(
+  /** Read a specific rel-path subset of a table's files as they are
+    * on disk — pending merge-on-read deletes NOT applied (the physical
+    * rows, what [[FileBlooms]] indexes); a read of a version goes
+    * through [[Snapshot.scan]]. */
+  private[pipeline] def readRel(
       spark: SparkSession, dir: String, relPaths: Seq[String]): DataFrame =
     readFiles(spark, relPaths.map(p => absPath(dir, p)))
 
@@ -650,21 +654,196 @@ object MergeTable {
     }
   }
 
-  /** [[applyDv]] for callers outside this object that assembled a file
-    * subset themselves ([[FileBlooms.readWhereEq]], the `graft`
-    * DataSource relation). */
-  private[graft] def applyDeletes(
-      spark: SparkSession, dir: String, version: Int, df: DataFrame): DataFrame =
-    applyDv(spark, dir, readManifest(spark, dir, version), df)
-
   /** Read a version (default: latest) as a DataFrame — pending
     * merge-on-read deletes applied. */
   def read(spark: SparkSession, dir: String, version: Int = -1): DataFrame = {
+    val s = snapshot(spark, dir, version)
+    require(s.files.nonEmpty, s"version ${s.version} of $dir is empty")
+    s.scan(s.files)
+  }
+
+  /** The [[Snapshot]] of `version` (default: latest, resolved here). */
+  def snapshot(spark: SparkSession, dir: String, version: Int = -1): Snapshot = {
     val v = if (version > 0) version else latestVersion(spark, dir)
-    val m = readManifest(spark, dir, v)
-    val files = m.entries.values.flatten.toSeq.sorted.map(p => absPath(dir, p))
-    require(files.nonEmpty, s"version $v of $dir is empty")
-    applyDv(spark, dir, m, readFiles(spark, files))
+    new Snapshot(spark, dir, v, readManifest(spark, dir, v))
+  }
+
+  /** One committed version, its manifest read once: files by bucket,
+    * the pending delete ledger, the merge key, the schema a read of it
+    * has, and the zone and Bloom sidecars, each loaded on first use.
+    * Every read that decides or scans files at one version — a `graft`
+    * relation and the plan rules over it, the pruned reads below,
+    * [[FileBlooms.readWhereEq]], the metadata aggregates — shares one
+    * snapshot instead of re-reading the version's files per decision.
+    * A committed version never changes, so a snapshot stays exact for
+    * as long as its holder keeps it; there is no process-wide cache.
+    * A Bloom sidecar can still appear for a committed version
+    * ([[FileBlooms.build]], `BloomIndex.advance`), so an absent one is
+    * looked up again on every use and never remembered. */
+  final class Snapshot private[MergeTable] (
+      spark: SparkSession, val dir: String, val version: Int, m: Manifest) {
+
+    /** The bucket → data-file index, rel-paths sorted per bucket. */
+    val byBucket: Map[Int, Seq[String]] =
+      m.entries.map { case (b, ps) => b -> ps.sorted }
+    /** Every data file of the version, sorted. */
+    val files: Seq[String] = byBucket.values.flatten.toSeq.sorted
+    def pendingDeletes: Seq[DvFile] = m.dv.sortBy(d => (d.bucket, d.rel))
+    def mergeKey: Option[String] = m.key
+
+    private lazy val ledgeredFiles: Set[String] = {
+      val dvBuckets = m.dv.map(_.bucket).toSet
+      byBucket.collect { case (b, fs) if dvBuckets(b) => fs }.flatten.toSet
+    }
+    /** Does `rel` sit in a bucket with pending deletes? Its physical
+      * rows may then include deleted ones. */
+    def ledgered(rel: String): Boolean = ledgeredFiles(rel)
+
+    /** The schema [[read]] gives: the files' merged footer schema, all
+      * fields nullable as a file read makes them, and — under a pending
+      * ledger — the merge key first, where the anti-join puts it. */
+    lazy val schema: StructType = {
+      val s = Bridge.asNullable(filesSchema(spark, files.map(absPath(dir, _))))
+      m.dvKey.filter(_ => m.dv.nonEmpty).fold(s) { k =>
+        val (key, rest) = s.fields.partition(_.name == k)
+        StructType(key ++ rest)
+      }
+    }
+
+    /** Per-file zones (sidecar, harvested where it lacks a file). */
+    lazy val zones: Map[String, Map[String, ZoneMaps.Zone]] =
+      ZoneMaps.forVersion(spark, dir, version, files)
+    def zonesOf(rel: String): Map[String, ZoneMaps.Zone] =
+      zones.getOrElse(rel, Map.empty)
+
+    /** [[zones]] with the files that lack a row count, or an exact null
+      * count for one of `cols`, re-harvested from their footers —
+      * legacy sidecar lines. `absentStale` decides a file that carries
+      * no zone for a column at all: re-harvest it (the metadata
+      * aggregates, which must answer) or leave it (the plan rules,
+      * which then scan it). */
+    def completeZones(
+        cols: Seq[String], absentStale: Boolean): Map[String, Map[String, ZoneMaps.Zone]] = {
+      val stale = files.filter { r =>
+        val fz = zonesOf(r)
+        ZoneMaps.rowCount(fz).isEmpty ||
+          cols.exists(c => fz.get(c).fold(absentStale)(_.nullCount < 0))
+      }
+      zones ++ ZoneMaps.harvest(spark, dir, stale)
+    }
+
+    private val bloomsLoaded =
+      scala.collection.concurrent.TrieMap.empty[String, Map[String, BloomFilter]]
+    /** `column`'s Bloom sidecar, decoded; None while it is absent. */
+    def blooms(column: String): Option[Map[String, BloomFilter]] =
+      bloomsLoaded.get(column).orElse {
+        val got = FileBlooms.read(spark, dir, column, version).map(_.map {
+          case (r, bytes) => r -> BloomFilter.readFrom(new ByteArrayInputStream(bytes))
+        })
+        got.foreach(bloomsLoaded.put(column, _))
+        got
+      }
+
+    /** Which files may hold a row within `b` — a strict superset pass:
+      * a file without evidence for the bound is always kept. */
+    def keep(b: Bound): String => Boolean = b match {
+      case NumBound(c, lo, hi) =>
+        // Double zones: the exact filter coerces the decimal bounds to
+        // DOUBLE, so the values it actually compares are the NEAREST
+        // doubles — which can sit below lo / above hi (0.3's nearest
+        // double is under 0.3). Prune double zones against those exact
+        // doubles, widened to whichever side is looser, so pruning stays
+        // a strict superset of the filter at the representation
+        // boundary. Bounds outside double range never prune a double zone.
+        val loD = lo.toDouble
+        val hiD = hi.toDouble
+        val dblPrunable = !loD.isInfinite && !hiD.isInfinite
+        lazy val loW = lo.min(BigDecimal(new java.math.BigDecimal(loD)))
+        lazy val hiW = hi.max(BigDecimal(new java.math.BigDecimal(hiD)))
+        r => zonesOf(r).get(c) match {
+          case Some(z) if z.kind == "double" => !dblPrunable || z.mightIntersect(loW, hiW)
+          case Some(z) if z.kind == "str" => true // string zone, numeric bounds
+          case Some(z) => z.mightIntersect(lo, hi)
+          case None => true
+        }
+      case StrBound(c, lo, hi) =>
+        r => zonesOf(r).get(c).forall(z => z.kind != "str" || z.mightIntersectStr(lo, hi))
+      case NullBound(c, isNull) =>
+        r => zonesOf(r).get(c).forall(z => if (isNull) z.hasNulls else !z.allNull)
+      case EqBound(c, values) => FileBlooms.keepEq(this, c, values)
+    }
+
+    /** (files kept, total files) for one bound. */
+    def pruned(b: Bound): (Seq[String], Int) = (files.filter(keep(b)), files.size)
+
+    /** The one read body of every pruned read: `kept` (rel-paths of this
+      * version) filtered by `pred`, pending deletes applied. An empty
+      * `kept` reads as an empty frame of the version's schema. */
+    def scan(kept: Seq[String], pred: Option[Column] = None): DataFrame =
+      if (kept.isEmpty) {
+        val empty = spark.createDataFrame(java.util.List.of[Row](), schema)
+        pred.fold(empty)(empty.filter)
+      } else {
+        val df = readFiles(spark, kept.map(absPath(dir, _)))
+        applyDv(spark, dir, m, pred.fold(df)(df.filter))
+      }
+
+    private def requireNoLedger(): Unit =
+      // zone stats describe PHYSICAL rows; with a pending merge-on-read
+      // delete ledger the counts (and possibly extremes) would include
+      // deleted rows — refuse loudly rather than approximate
+      require(m.dv.isEmpty,
+        s"version $version of $dir has ${m.dv.map(_.rows).sum} pending " +
+          "merge-on-read delete keys — metadata-only aggregates would count " +
+          "deleted rows; materialize first (purgeDeletes/compact/optimize)")
+
+    /** [[metaRowCount]] of this version. */
+    def rowCount: Long = {
+      requireNoLedger()
+      val zs = completeZones(Nil, absentStale = false)
+      files.map { r =>
+        ZoneMaps.rowCount(zs.getOrElse(r, Map.empty)).getOrElse(
+          throw new IllegalStateException(s"no row count harvestable for $r"))
+      }.sum
+    }
+
+    /** [[metaAggregate]]'s rows for this version. */
+    def metaRows(columns: Seq[String]): Seq[Row] = {
+      require(columns.nonEmpty, "no columns requested")
+      requireNoLedger()
+      val zs = completeZones(columns, absentStale = true)
+      columns.map { c =>
+        var n = 0L
+        var nonNull = 0L
+        var mn: BigDecimal = null
+        var mx: BigDecimal = null
+        files.foreach { r =>
+          val cols = zs.getOrElse(r, Map.empty[String, ZoneMaps.Zone])
+          val fileRows = ZoneMaps.rowCount(cols).getOrElse(
+            throw new IllegalStateException(s"no row count harvestable for $r"))
+          n += fileRows
+          val z = cols.getOrElse(c, throw new IllegalArgumentException(
+            s"column '$c' carries no zone in $r — metadata aggregates " +
+              "cover numeric columns only"))
+          // str zones are truncated BOUNDS, not exact values — reporting
+          // them as MIN/MAX would approximate, which this surface never does
+          require(z.kind == "long" || z.kind == "double",
+            s"column '$c' is non-numeric (${z.kind}) — metadata aggregates " +
+              "cover numeric columns only")
+          require(z.nullCount >= 0,
+            s"column '$c' has no null count in $r even after re-harvest")
+          nonNull += fileRows - z.nullCount
+          if (!z.allNull) {
+            val zmn = BigDecimal(z.min); val zmx = BigDecimal(z.max)
+            mn = if (mn == null) zmn else mn.min(zmn)
+            mx = if (mx == null) zmx else mx.max(zmx)
+          }
+        }
+        Row(c, n, nonNull,
+          if (mn == null) null else mn.bigDecimal.toPlainString,
+          if (mx == null) null else mx.bigDecimal.toPlainString)
+      }
+    }
   }
 
   /** Bucket-pruned point lookup: read ONLY the buckets the requested
@@ -693,10 +872,8 @@ object MergeTable {
     * observable CoW contract: after a merge, untouched buckets' entries
     * are IDENTICAL to the previous version's. */
   def fileIndex(
-      spark: SparkSession, dir: String, version: Int = -1): Map[Int, Seq[String]] = {
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    readManifest(spark, dir, v).entries.map { case (b, ps) => b -> ps.sorted }
-  }
+      spark: SparkSession, dir: String, version: Int = -1): Map[Int, Seq[String]] =
+    snapshot(spark, dir, version).byBucket
 
   /** MERGE `updates` into the table: rows whose key exists are replaced,
     * new keys are inserted, and rows flagged true in `deleteCol` are
@@ -848,10 +1025,8 @@ object MergeTable {
   /** The version's pending merge-on-read delete ledger (empty = fully
     * materialized table). */
   def pendingDeletes(
-      spark: SparkSession, dir: String, version: Int = -1): Seq[DvFile] = {
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    readManifest(spark, dir, v).dv.sortBy(d => (d.bucket, d.rel))
-  }
+      spark: SparkSession, dir: String, version: Int = -1): Seq[DvFile] =
+    snapshot(spark, dir, version).pendingDeletes
 
   /** Materialize ALL pending merge-on-read deletes — one
     * [[compactBuckets]] over exactly the buckets with ledger entries
@@ -990,17 +1165,7 @@ object MergeTable {
     val f = fs(spark, dir)
     val p = constraintsPath(dir)
     if (!f.exists(p)) Seq.empty
-    else {
-      val in = f.open(p)
-      val text = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        new String(bos.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-      text.split("\n").toSeq.filter(_.nonEmpty).map(decRule)
-    }
+    else readText(f, p).split("\n").toSeq.filter(_.nonEmpty).map(decRule)
   }
 
   /** Drop the table's persisted CHECK constraints. */
@@ -1686,23 +1851,15 @@ object MergeTable {
     * Use [[prunedFiles]] for the skip evidence. */
   def readWhere(
       spark: SparkSession, dir: String, column: String,
-      lo: BigDecimal, hi: BigDecimal, version: Int = -1): DataFrame = {
-    val (kept, _) = prunedFiles(spark, dir, column, lo, hi, version)
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    val pred = col(column) >= lit(lo.bigDecimal) && col(column) <= lit(hi.bigDecimal)
-    if (kept.isEmpty) read(spark, dir, v).filter(pred).limit(0)
-    else applyDeletes(spark, dir, v,
-      readFiles(spark, kept.map(p => absPath(dir, p))).filter(pred))
-  }
+      lo: BigDecimal, hi: BigDecimal, version: Int = -1): DataFrame =
+    readWhereBounds(spark, dir, Seq(NumBound(column, lo, hi)), version)
 
   /** Conjunctive multi-column zone-pruned scan: read ONLY the files
     * that survive [[prunedFiles]] on EVERY bound (a file skippable on
     * any one dimension cannot hold a qualifying row), then apply the
     * exact conjunction. On a [[clusterByZ]] layout every bounded
     * column prunes — the payoff of the curve; on any other layout the
-    * extra bounds simply prune less (superset pass, exact always).
-    * Zone sidecar is re-read per bound — O(bounds × files) metadata
-    * text, trivial next to the scan it saves. */
+    * extra bounds simply prune less (superset pass, exact always). */
   def readWhereAll(
       spark: SparkSession, dir: String,
       bounds: Seq[(String, BigDecimal, BigDecimal)],
@@ -1710,76 +1867,57 @@ object MergeTable {
     readWhereBounds(spark, dir,
       bounds.map { case (c, lo, hi) => NumBound(c, lo, hi) }, version)
 
-  /** A typed per-column bound for [[readWhereBounds]] — numeric
-    * ([[NumBound]], BigDecimal range against long/double zones) or
-    * string ([[StrBound]], code-point range against truncated-UTF-8
-    * `str` zones). */
-  sealed trait Bound { def column: String }
+  /** A typed per-column bound for [[readWhereBounds]], with the exact
+    * predicate it stands for and ([[Snapshot.keep]]) the files that
+    * may hold a row within it — numeric ([[NumBound]], BigDecimal
+    * range against long/double zones), string ([[StrBound]],
+    * code-point range against truncated-UTF-8 `str` zones), null
+    * ([[NullBound]], per-file null counts) or equality ([[EqBound]],
+    * `IN` against the column's Bloom sidecar). */
+  sealed trait Bound {
+    def column: String
+    def pred: Column
+  }
   final case class NumBound(column: String, lo: BigDecimal, hi: BigDecimal)
-    extends Bound
+      extends Bound {
+    def pred: Column =
+      col(column) >= lit(lo.bigDecimal) && col(column) <= lit(hi.bigDecimal)
+  }
   final case class StrBound(column: String, lo: String, hi: String)
-    extends Bound
+      extends Bound {
+    require(lo != null && hi != null, "null bounds")
+    def pred: Column = col(column) >= lit(lo) && col(column) <= lit(hi)
+  }
+  final case class NullBound(column: String, isNull: Boolean) extends Bound {
+    def pred: Column = if (isNull) col(column).isNull else col(column).isNotNull
+  }
+  final case class EqBound(column: String, values: Seq[Any]) extends Bound {
+    require(values.nonEmpty, "empty probe set")
+    def pred: Column = col(column).isin(values: _*)
+  }
 
-  /** Conjunctive zone-pruned scan over MIXED numeric and string
-    * bounds — [[readWhereAll]] generalized: a file survives only if
-    * EVERY bound might intersect its zone (numeric bounds prune via
-    * [[prunedFiles]], string bounds via [[prunedFilesStr]]), then the
-    * exact conjunction applies. The common curated-corpus shape —
-    * `lang = 'en' AND n_chars BETWEEN a AND b` — prunes on whichever
-    * columns the layout localizes and stays exact on all of them
-    * (superset pass; an unclustered or truncation-widened dimension
-    * simply prunes less). */
+  /** Conjunctive sidecar-pruned scan over MIXED bounds — a file
+    * survives only if EVERY bound keeps it, then the exact conjunction
+    * applies. The common curated-corpus shape — `lang = 'en' AND
+    * n_chars BETWEEN a AND b` — prunes on whichever columns the layout
+    * localizes and stays exact on all of them (superset pass; an
+    * unclustered or truncation-widened dimension simply prunes less). */
   def readWhereBounds(
       spark: SparkSession, dir: String, bounds: Seq[Bound],
       version: Int = -1): DataFrame = {
     require(bounds.nonEmpty, "no bounds")
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    val kept = bounds.map {
-      case NumBound(c, lo, hi) => prunedFiles(spark, dir, c, lo, hi, v)._1.toSet
-      case StrBound(c, lo, hi) => prunedFilesStr(spark, dir, c, lo, hi, v)._1.toSet
-    }.reduce(_ intersect _).toSeq.sorted
-    val pred = bounds.map {
-      case NumBound(c, lo, hi) =>
-        col(c) >= lit(lo.bigDecimal) && col(c) <= lit(hi.bigDecimal)
-      case StrBound(c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi)
-    }.reduce(_ && _)
-    if (kept.isEmpty) read(spark, dir, v).filter(pred).limit(0)
-    else applyDeletes(spark, dir, v,
-      readFiles(spark, kept.map(p => absPath(dir, p))).filter(pred))
+    val s = snapshot(spark, dir, version)
+    val keeps = bounds.map(s.keep)
+    s.scan(s.files.filter(r => keeps.forall(_(r))),
+      Some(bounds.map(_.pred).reduce(_ && _)))
   }
 
   /** The file-skipping decision behind [[readWhere]]:
     * (files kept, total files) for `column ∈ [lo, hi]` at `version`. */
   def prunedFiles(
       spark: SparkSession, dir: String, column: String,
-      lo: BigDecimal, hi: BigDecimal, version: Int = -1): (Seq[String], Int) = {
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    val m = readManifest(spark, dir, v)
-    val rel = m.entries.values.flatten.toSeq.sorted
-    val zones = ZoneMaps.forVersion(spark, dir, v, rel)
-    // Double zones: [[readWhere]]'s filter coerces the decimal bounds
-    // to DOUBLE, so the values it actually compares are the NEAREST
-    // doubles — which can sit below lo / above hi (0.3's nearest double
-    // is under 0.3). Prune double zones against those exact doubles,
-    // widened to whichever side is looser, so pruning stays a strict
-    // superset of the filter at the representation boundary. Bounds
-    // outside double range never prune a double zone.
-    val loD = lo.toDouble
-    val hiD = hi.toDouble
-    val dblPrunable = !loD.isInfinite && !hiD.isInfinite
-    lazy val loW = lo.min(BigDecimal(new java.math.BigDecimal(loD)))
-    lazy val hiW = hi.max(BigDecimal(new java.math.BigDecimal(hiD)))
-    val kept = rel.filter { r =>
-      zones.get(r).flatMap(_.get(column)) match {
-        case Some(z) if z.kind == "double" =>
-          !dblPrunable || z.mightIntersect(loW, hiW)
-        case Some(z) if z.kind == "str" => true // string zone, numeric bounds
-        case Some(z) => z.mightIntersect(lo, hi)
-        case None => true // no zone — never skip on absence of evidence
-      }
-    }
-    (kept, rel.size)
-  }
+      lo: BigDecimal, hi: BigDecimal, version: Int = -1): (Seq[String], Int) =
+    snapshot(spark, dir, version).pruned(NumBound(column, lo, hi))
 
   /** [[prunedFiles]] for STRING bounds: a file is skippable when its
     * [[ZoneMaps]] `str` zone (truncated UTF-8 min/max, Parquet/Iceberg
@@ -1792,20 +1930,8 @@ object MergeTable {
     * ([[clusterBy]] works on strings unchanged). */
   def prunedFilesStr(
       spark: SparkSession, dir: String, column: String,
-      lo: String, hi: String, version: Int = -1): (Seq[String], Int) = {
-    require(lo != null && hi != null, "null bounds")
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    val m = readManifest(spark, dir, v)
-    val rel = m.entries.values.flatten.toSeq.sorted
-    val zones = ZoneMaps.forVersion(spark, dir, v, rel)
-    val kept = rel.filter { r =>
-      zones.get(r).flatMap(_.get(column)) match {
-        case Some(z) if z.kind == "str" => z.mightIntersectStr(lo, hi)
-        case _ => true // numeric/absent zone — never skip without evidence
-      }
-    }
-    (kept, rel.size)
-  }
+      lo: String, hi: String, version: Int = -1): (Seq[String], Int) =
+    snapshot(spark, dir, version).pruned(StrBound(column, lo, hi))
 
   /** [[prunedFiles]] for NULL probes — the null-count side of the zone
     * sidecar: with `isNull`, a file whose zone records ZERO nulls
@@ -1816,28 +1942,15 @@ object MergeTable {
     * strict superset like every other sidecar prune. */
   def prunedFilesNull(
       spark: SparkSession, dir: String, column: String, isNull: Boolean,
-      version: Int = -1): (Seq[String], Int) = {
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    val m = readManifest(spark, dir, v)
-    val rel = m.entries.values.flatten.toSeq.sorted
-    val zones = ZoneMaps.forVersion(spark, dir, v, rel)
-    val kept = rel.filter { r =>
-      zones.get(r).flatMap(_.get(column)) match {
-        case Some(z) => if (isNull) z.hasNulls else !z.allNull
-        case None => true // no zone — never skip on absence of evidence
-      }
-    }
-    (kept, rel.size)
-  }
+      version: Int = -1): (Seq[String], Int) =
+    snapshot(spark, dir, version).pruned(NullBound(column, isNull))
 
   /** The table's recorded bucketing merge key — the column [[create]] /
     * [[merge]] / [[rebucket]] hashed rows by (absent when the newest
     * commit predates key recording). */
   def mergeKey(
-      spark: SparkSession, dir: String, version: Int = -1): Option[String] = {
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    readManifest(spark, dir, v).key
-  }
+      spark: SparkSession, dir: String, version: Int = -1): Option[String] =
+    snapshot(spark, dir, version).mergeKey
 
   /** Newest streaming-sink batch id committed into the version chain —
     * the `graft` sink's replay-dedup cursor (a retried micro-batch with
@@ -1866,14 +1979,18 @@ object MergeTable {
     * regardless of layout, sidecar presence or zone truncation). */
   def readWhereStr(
       spark: SparkSession, dir: String, column: String,
-      lo: String, hi: String, version: Int = -1): DataFrame = {
-    val (kept, _) = prunedFilesStr(spark, dir, column, lo, hi, version)
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    val pred = col(column) >= lit(lo) && col(column) <= lit(hi)
-    if (kept.isEmpty) read(spark, dir, v).filter(pred).limit(0)
-    else applyDeletes(spark, dir, v,
-      readFiles(spark, kept.map(p => absPath(dir, p))).filter(pred))
-  }
+      lo: String, hi: String, version: Int = -1): DataFrame =
+    readWhereBounds(spark, dir, Seq(StrBound(column, lo, hi)), version)
+
+  /** `COUNT(*)` from metadata alone — the row-count slice of
+    * [[metaAggregate]], available even when the table has no numeric
+    * column: per-file zone row counts sum exactly (legacy sidecar lines
+    * degrade to a footer re-harvest, metadata I/O only). Refuses under
+    * a pending merge-on-read ledger for the same reason metaAggregate
+    * does — physical counts would include deleted rows. */
+  def metaRowCount(
+      spark: SparkSession, dir: String, version: Int = -1): Long =
+    snapshot(spark, dir, version).rowCount
 
   /** METADATA-ONLY aggregates — `COUNT(*)`, `COUNT(col)`, `MIN(col)`,
     * `MAX(col)` for numeric columns answered from the version's zone
@@ -1892,95 +2009,18 @@ object MergeTable {
     * `(column, n_rows, n_nonnull, min_v, max_v)` — min/max as exact
     * plain-decimal strings (a long > 2^53 would corrupt through a
     * double), NULL when every value is NULL. */
-  /** `COUNT(*)` from metadata alone — the row-count slice of
-    * [[metaAggregate]], available even when the table has no numeric
-    * column: per-file zone row counts sum exactly (legacy sidecar lines
-    * degrade to a footer re-harvest, metadata I/O only). Refuses under
-    * a pending merge-on-read ledger for the same reason metaAggregate
-    * does — physical counts would include deleted rows. */
-  def metaRowCount(
-      spark: SparkSession, dir: String, version: Int = -1): Long = {
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    val m = readManifest(spark, dir, v)
-    require(m.dv.isEmpty,
-      s"version $v of $dir has ${m.dv.map(_.rows).sum} pending merge-on-read " +
-        "delete keys — metadata-only aggregates would count deleted rows; " +
-        "materialize first (purgeDeletes/compact/optimize)")
-    val rel = m.entries.values.flatten.toSeq.sorted
-    val first = ZoneMaps.forVersion(spark, dir, v, rel)
-    val incomplete = rel.filter(r =>
-      ZoneMaps.rowCount(first.getOrElse(r, Map.empty)).isEmpty)
-    val zones = first ++ ZoneMaps.harvest(spark, dir, incomplete)
-    rel.map { r =>
-      ZoneMaps.rowCount(zones.getOrElse(r, Map.empty)).getOrElse(
-        throw new IllegalStateException(s"no row count harvestable for $r"))
-    }.sum
-  }
-
   def metaAggregate(
       spark: SparkSession, dir: String, columns: Seq[String],
       version: Int = -1): DataFrame = {
-    require(columns.nonEmpty, "no columns requested")
-    val v = if (version > 0) version else latestVersion(spark, dir)
-    val m = readManifest(spark, dir, v)
-    // zone stats describe PHYSICAL rows; with a pending merge-on-read
-    // delete ledger the counts (and possibly extremes) would include
-    // deleted rows — refuse loudly rather than approximate
-    require(m.dv.isEmpty,
-      s"version $v of $dir has ${m.dv.map(_.rows).sum} pending merge-on-read " +
-        "delete keys — metadata-only aggregates would count deleted rows; " +
-        "materialize first (purgeDeletes/compact/optimize)")
-    val rel = m.entries.values.flatten.toSeq.sorted
-    val first = ZoneMaps.forVersion(spark, dir, v, rel)
-    // legacy sidecar lines (no #rows / unknown nullCount) → one footer
-    // re-harvest of just those files
-    val incomplete = rel.filter { r =>
-      val cols = first.getOrElse(r, Map.empty[String, ZoneMaps.Zone])
-      ZoneMaps.rowCount(cols).isEmpty ||
-        columns.exists(c => cols.get(c).forall(_.nullCount < 0))
-    }
-    val zones = first ++ ZoneMaps.harvest(spark, dir, incomplete)
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val out = columns.map { c =>
-      var n = 0L
-      var nonNull = 0L
-      var mn: BigDecimal = null
-      var mx: BigDecimal = null
-      rel.foreach { r =>
-        val cols = zones.getOrElse(r, Map.empty[String, ZoneMaps.Zone])
-        val fileRows = ZoneMaps.rowCount(cols).getOrElse(
-          throw new IllegalStateException(s"no row count harvestable for $r"))
-        n += fileRows
-        val z = cols.getOrElse(c, throw new IllegalArgumentException(
-          s"column '$c' carries no zone in $r — metadata aggregates " +
-            "cover numeric columns only"))
-        // str zones are truncated BOUNDS, not exact values — reporting
-        // them as MIN/MAX would approximate, which this surface never does
-        require(z.kind == "long" || z.kind == "double",
-          s"column '$c' is non-numeric (${z.kind}) — metadata aggregates " +
-            "cover numeric columns only")
-        require(z.nullCount >= 0,
-          s"column '$c' has no null count in $r even after re-harvest")
-        nonNull += fileRows - z.nullCount
-        if (!z.allNull) {
-          val zmn = BigDecimal(z.min); val zmx = BigDecimal(z.max)
-          mn = if (mn == null) zmn else mn.min(zmn)
-          mx = if (mx == null) zmx else mx.max(zmx)
-        }
-      }
-      Row(c, n, nonNull,
-        if (mn == null) null else mn.bigDecimal.toPlainString,
-        if (mx == null) null else mx.bigDecimal.toPlainString)
-    }
     val schema = StructType(Seq(
       StructField("column", StringType, nullable = false),
       StructField("n_rows", LongType, nullable = false),
       StructField("n_nonnull", LongType, nullable = false),
       StructField("min_v", StringType, nullable = true),
       StructField("max_v", StringType, nullable = true)))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out, 1), schema)
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      snapshot(spark, dir, version).metaRows(columns), 1), schema)
   }
 
   /** DESCRIBE HISTORY — one row per committed (retained) version, in
@@ -1994,7 +2034,6 @@ object MergeTable {
     * [[vacuum]] are gone from history too — retention is the audit
     * horizon, as in Delta's DESCRIBE HISTORY. */
   def history(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val f = fs(spark, dir)
     val vs = versions(spark, dir)

@@ -562,15 +562,7 @@ object ZoneMaps {
     val p = zonesPath(dir, v)
     if (!f.exists(p)) None
     else {
-      val in = f.open(p)
-      val text = try {
-        val bos = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-        new String(bos.toByteArray, StandardCharsets.UTF_8)
-      } finally in.close()
-      val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+      val lines = MergeTable.readText(f, p).split("\n").toSeq.filter(_.nonEmpty)
       // "#format\t<N>" header (format 2+: str zones, %-escaped fields,
       // poisoning-safe long zones). A headerless sidecar predates the
       // logical-type poisoning fix, so its `long` lines may hold RAW

@@ -3,7 +3,6 @@ package graft.plans
 import scala.util.Try
 import scala.util.chaining._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, AttributeReference, Cast, Coalesce, Divide, EqualTo, Expression, Greatest, GreaterThan, GreaterThanOrEqual, If, In, InSet, IsNotNull, IsNull, KnownNotNull, Least, LessThan, LessThanOrEqual, Literal, Or, TruncDate, TruncTimestamp}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
@@ -12,15 +11,16 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types._
 
-import graft.pipeline.{MergeTable, ZoneMaps}
+import graft.pipeline.ZoneMaps
 import graft.sources.GraftRelation
 
 /** Connector AGGREGATE PUSHDOWN for `graft` tables — the Delta/Iceberg
   * count-from-stats fast path surfaced to plain SQL: an ungrouped,
   * unfiltered `COUNT(*)` / `COUNT(col)` / `MIN(col)` / `MAX(col)` over
   * a [[GraftRelation]] collapses to a [[LocalRelation]] holding the
-  * answer from [[MergeTable.metaAggregate]] — per-file row counts and
-  * null counts sum exactly, per-file numeric min/max fold exactly, so
+  * answer from the version's metadata
+  * ([[graft.pipeline.MergeTable.metaAggregate]]) — per-file row counts
+  * and null counts sum exactly, per-file numeric min/max fold exactly, so
   * the rewritten plan scans ZERO data files (the zone sidecar is
   * O(files) driver metadata). At 100 TB this turns the most common
   * audit queries (`SELECT COUNT(*) FROM corpus`) from a full-corpus
@@ -30,13 +30,15 @@ import graft.sources.GraftRelation
   * when EVERY aggregate is one of the four shapes (no DISTINCT, no
   * FILTER clause, bare column children), the child is the relation
   * itself (possibly through a column-pruning Project), and the metadata
-  * answer is computable. [[MergeTable.metaAggregate]] refuses pending
+  * answer is computable. The metadata aggregate refuses pending
   * merge-on-read ledgers, non-numeric columns and zone-less files — any
   * refusal (or any unexpected failure) leaves the original plan to run
   * as a normal scan, so the rewrite can change cost, never results. The
-  * answer comes from the relation's OWN resolved version (pinned at
-  * relation construction), so a concurrent commit cannot move the table
-  * under the query.
+  * answer comes from the relation's OWN resolved version: every path
+  * reads the relation's [[graft.pipeline.MergeTable.Snapshot]] (files,
+  * delete ledger and zones, loaded once per relation), and the subset
+  * relation a hybrid scans shares it, so a concurrent commit cannot
+  * move the table under the query.
   *
   * FILTERED `COUNT(*)` / `COUNT(col)` (the Iceberg inclusive-metrics
   * hybrid): when the WHERE tree is inside the file-decidable algebra
@@ -94,6 +96,16 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
     * merge, the decomposition Spark's own partial aggregation uses. */
   private final case class SumOf(col: String, dt: DataType) extends MetaAgg
   private final case class AvgOf(col: String, dt: DataType) extends MetaAgg
+
+  /** The column a slot reads (None for `COUNT(*)`). */
+  private def columnOf(m: MetaAgg): Option[String] = m match {
+    case RowCount => None
+    case NonNull(c) => Some(c)
+    case MinOf(c, _) => Some(c)
+    case MaxOf(c, _) => Some(c)
+    case SumOf(c, _) => Some(c)
+    case AvgOf(c, _) => Some(c)
+  }
 
   /** The metadata shape of one aggregate expression, if it has one. */
   private def metaOf(e: Expression): Option[MetaAgg] = e match {
@@ -864,7 +876,6 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
       val (condO, lr, rel) = graftTarget(groupedTarget(agg)._2).get
       if (condO.exists(c => !supportedExpr(c))) agg
       else Try {
-        val spark = SparkSession.active
         // LEDGER-AWARE (round 14): a pending merge-on-read ledger no
         // longer vetoes the whole rewrite — files in a ledgered BUCKET
         // are forced Boundary (their physical rows may include deleted
@@ -872,31 +883,15 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
         // other bucket's files still decide from metadata. Keys ledger
         // into their own hash bucket, so a ledger-free bucket's rows
         // are provably untouched.
-        val dvBuckets = MergeTable.pendingDeletes(spark, rel.dir, rel.v)
-          .map(_.bucket).toSet
+        val snap = rel.snapshot
+        val files = snap.files
         val aliasSlots = shapes.collect { case Right(x) => x }
         val flatSlots: Seq[(AggregateExpression, MetaAgg)] =
           aliasSlots.flatMap(_._2)
         val aggs = flatSlots.map(_._2)
-        val byBucket = MergeTable.fileIndex(spark, rel.dir, rel.v)
-        val fileBucket: Map[String, Int] = byBucket.toSeq.flatMap {
-          case (b, fs) => fs.map(_ -> b) }.toMap
-        val files = byBucket.values.flatten.toSeq.sorted
-        val first = ZoneMaps.forVersion(spark, rel.dir, rel.v, files)
         val cols = (condO.toSeq.flatMap(attrsOf) ++ keys.map(_.src.name) ++
-          aggs.collect {
-            case NonNull(c) => c
-            case MinOf(c, _) => c
-            case MaxOf(c, _) => c
-            case SumOf(c, _) => c
-            case AvgOf(c, _) => c
-          }).distinct
-        val incomplete = files.filter { r =>
-          val fz = first.getOrElse(r, Map.empty[String, ZoneMaps.Zone])
-          ZoneMaps.rowCount(fz).isEmpty ||
-            cols.exists(c => fz.get(c).exists(_.nullCount < 0))
-        }
-        val zones = first ++ ZoneMaps.harvest(spark, rel.dir, incomplete)
+          aggs.flatMap(columnOf)).distinct
+        val zones = snap.completeZones(cols, absentStale = false)
         // group tuple (each slot None = that column's SQL NULL group) →
         // per-slot accumulators: summed counts, folded min/max
         val metaGroups = scala.collection.mutable.LinkedHashMap
@@ -906,7 +901,7 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
           val fz = zones.getOrElse(r, Map.empty[String, ZoneMaps.Zone])
           val fdec = condO.map(decideExpr(_, fz)).getOrElse(FullyIn)
           if (fdec == FullyOut) () // no deleted-row risk: deletes only shrink
-          else if (fdec != FullyIn || dvBuckets.contains(fileBucket(r)))
+          else if (fdec != FullyIn || snap.ledgered(r))
             boundary += r
           else {
             // the file decides only when EVERY group key is
@@ -964,8 +959,7 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
           // re-resolve against a table that advanced since construction
           // — metadata sums from the old version + boundary files from
           // the new one silently undercount (round-14 ADVICE)
-          val subset = lr.copy(relation =
-            rel.copy(version = rel.v, only = Some(partial)))
+          val subset = lr.copy(relation = rel.subset(partial))
           val pruned = Project(
             subset.output.filter(a => cols.contains(a.name)), subset)
           val filtered = condO.fold(pruned: LogicalPlan)(Filter(_, pruned))
@@ -1104,23 +1098,17 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
       val (condO, lr, rel) = graftTarget(agg.child).get
       if (condO.exists(c => !supportedExpr(c))) agg
       else Try {
-        val spark = SparkSession.active
-        val dvBuckets = MergeTable.pendingDeletes(spark, rel.dir, rel.v)
-          .map(_.bucket).toSet
-        val byBucket = MergeTable.fileIndex(spark, rel.dir, rel.v)
-        val fileBucket: Map[String, Int] = byBucket.toSeq.flatMap {
-          case (b, fs) => fs.map(_ -> b) }.toMap
-        val files = byBucket.values.flatten.toSeq.sorted
-        val zones = ZoneMaps.forVersion(spark, rel.dir, rel.v, files)
+        val snap = rel.snapshot
+        val files = snap.files
         val cols = (condO.toSeq.flatMap(attrsOf) :+ a.name).distinct
         // insertion-ordered so the rewritten plan is deterministic
         val metaVals = scala.collection.mutable.LinkedHashSet.empty[Any]
         val boundary = Seq.newBuilder[String]
         files.foreach { r =>
-          val fz = zones.getOrElse(r, Map.empty[String, ZoneMaps.Zone])
+          val fz = snap.zonesOf(r)
           val fdec = condO.map(decideExpr(_, fz)).getOrElse(FullyIn)
           if (fdec == FullyOut) () // deletes only shrink: still out
-          else if (fdec != FullyIn || dvBuckets.contains(fileBucket(r)))
+          else if (fdec != FullyIn || snap.ledgered(r))
             boundary += r
           else constOf(a.dataType, fz.get(a.name)) match {
             case Some(None) => () // all-null: DISTINCT ignores nulls
@@ -1139,8 +1127,7 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
           // once — nulls from boundary files ride the union and the
           // final distinct COUNT ignores them, exactly SQL semantics.
           // Subset pinned to rel.v like every hybrid scan.
-          val subset = lr.copy(relation =
-            rel.copy(version = rel.v, only = Some(partial)))
+          val subset = lr.copy(relation = rel.subset(partial))
           val pruned = Project(
             subset.output.filter(x => cols.contains(x.name)), subset)
           val filtered = condO.fold(pruned: LogicalPlan)(Filter(_, pruned))
@@ -1178,7 +1165,7 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
       val (condO, lr, rel) = graftTarget(agg.child).get
       if (condO.exists(c => !supportedExpr(c))) agg
       else Try {
-          val spark = SparkSession.active
+          val snap = rel.snapshot
           // one alias may wrap SEVERAL aggregates in deterministic
           // scalar structure (unix_micros(MIN(ts)), MAX(n) - MIN(n)):
           // slots flatten in order, and each reconstruction path grafts
@@ -1223,25 +1210,19 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
             case MinOf(_, StringType) | MaxOf(_, StringType) => true
             case _ => false
           }
-          val dv = MergeTable.pendingDeletes(spark, rel.dir, rel.v)
-          if (condO.isEmpty && dv.isEmpty && !needsSums) {
+          if (condO.isEmpty && snap.pendingDeletes.isEmpty && !needsSums) {
             // ZERO-SCAN fast path: unfiltered, no pending ledger — one
             // metadata pass answers everything, the plan collapses to a
             // LocalRelation (the Delta/Iceberg count-from-stats move)
-            val cols = shapes.collect {
-              case NonNull(c) => c
-              case MinOf(c, _) => c
-              case MaxOf(c, _) => c
-            }.distinct
+            val cols = shapes.flatMap(columnOf).distinct
             // column → (n_rows, n_nonnull, min_v, max_v)
             val stats: Map[String, (Long, Long, String, String)] =
               if (cols.isEmpty) Map.empty
-              else MergeTable.metaAggregate(spark, rel.dir, cols, rel.v)
-                .collect().map(r => r.getString(0) ->
+              else snap.metaRows(cols).map(r => r.getString(0) ->
                   (r.getLong(1), r.getLong(2), r.getString(3), r.getString(4)))
                 .toMap
             lazy val nRows: Long = stats.headOption.map(_._2._1)
-              .getOrElse(MergeTable.metaRowCount(spark, rel.dir, rel.v))
+              .getOrElse(snap.rowCount)
             val values = shapes.map {
               case RowCount => nRows
               case NonNull(c) => stats(c)._2
@@ -1264,27 +1245,12 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
             // keys ledger into their own hash bucket, so every other
             // bucket is provably untouched) — a 100 TB table with ten
             // pending deletes keeps its pushdown.
-            val dvBuckets = dv.map(_.bucket).toSet
-            val byBucket = MergeTable.fileIndex(spark, rel.dir, rel.v)
-            val fileBucket: Map[String, Int] = byBucket.toSeq.flatMap {
-              case (b, fs) => fs.map(_ -> b) }.toMap
-            val files = byBucket.values.flatten.toSeq.sorted
-            val first = ZoneMaps.forVersion(spark, rel.dir, rel.v, files)
+            val files = snap.files
             // legacy lines (no #rows / unknown nullCount) → one footer
             // re-harvest of just those files, metadata I/O only
-            val cols = (condO.toSeq.flatMap(attrsOf) ++ shapes.collect {
-              case NonNull(c) => c
-              case MinOf(c, _) => c
-              case MaxOf(c, _) => c
-              case SumOf(c, _) => c
-              case AvgOf(c, _) => c
-            }).distinct
-            val incomplete = files.filter { r =>
-              val fz = first.getOrElse(r, Map.empty[String, ZoneMaps.Zone])
-              ZoneMaps.rowCount(fz).isEmpty ||
-                cols.exists(c => fz.get(c).exists(_.nullCount < 0))
-            }
-            val zones = first ++ ZoneMaps.harvest(spark, rel.dir, incomplete)
+            val cols = (condO.toSeq.flatMap(attrsOf) ++
+              shapes.flatMap(columnOf)).distinct
+            val zones = snap.completeZones(cols, absentStale = false)
             val metaCnt = Array.fill(shapes.size)(0L)
             val metaVal = Array.fill[Any](shapes.size)(null)
             val boundary = Seq.newBuilder[String]
@@ -1292,7 +1258,7 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
               val fz = zones.getOrElse(r, Map.empty[String, ZoneMaps.Zone])
               val fdec = condO.map(decideExpr(_, fz)).getOrElse(FullyIn)
               if (fdec == FullyOut) () // deletes only shrink: still out
-              else if (fdec != FullyIn || dvBuckets.contains(fileBucket(r)))
+              else if (fdec != FullyIn || snap.ledgered(r))
                 boundary += r
               else {
                 val rows = ZoneMaps.rowCount(fz).getOrElse(
@@ -1320,8 +1286,7 @@ object GraftMetaAggregate extends Rule[LogicalPlan] {
               // scan by hand: this rewrite runs AFTER the optimizer's
               // pruning batch, so without an explicit Project the V1
               // scan would read EVERY column (text included).
-              val subset = lr.copy(relation =
-                rel.copy(version = rel.v, only = Some(partial)))
+              val subset = lr.copy(relation = rel.subset(partial))
               val pruned = Project(
                 subset.output.filter(a => cols.contains(a.name)), subset)
               val filtered = condO.fold(pruned: LogicalPlan)(Filter(_, pruned))

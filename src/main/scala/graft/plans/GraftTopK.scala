@@ -3,14 +3,13 @@ package graft.plans
 import scala.util.Try
 import scala.util.chaining._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, Expression, Literal, NullsFirst, NullsLast, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 
-import graft.pipeline.{MergeTable, ZoneMaps}
+import graft.pipeline.ZoneMaps
 import graft.sources.GraftRelation
 
 /** ZONE-PRUNED GLOBAL TOP-K and LIMIT pushdown for `graft` tables
@@ -57,6 +56,11 @@ import graft.sources.GraftRelation
   * a usable zone is simply kept. The exclusion test is STRICT
   * (max < T), so ties at the k-th bound always survive to the sort. A
   * plan where nothing can be excluded is returned unchanged.
+  *
+  * The evidence is the relation's [[graft.pipeline.MergeTable.Snapshot]]
+  * — its files, delete ledger and zones, loaded once per relation
+  * however many folds consult them — and the subset relation that
+  * replaces it shares that snapshot.
   */
 object GraftTopK extends Rule[LogicalPlan] {
 
@@ -85,19 +89,12 @@ object GraftTopK extends Rule[LogicalPlan] {
       allZones: Map[String, ZoneMaps.Zone] = Map.empty)
 
   private def evidence(
-      spark: SparkSession, rel: GraftRelation, col: String,
-      condO: Option[Expression]): Seq[FileEv] = {
-    val dvBuckets = MergeTable.pendingDeletes(spark, rel.dir, rel.v)
-      .map(_.bucket).toSet
-    val byBucket = MergeTable.fileIndex(spark, rel.dir, rel.v)
-    val fileBucket: Map[String, Int] =
-      byBucket.toSeq.flatMap { case (b, fs) => fs.map(_ -> b) }.toMap
-    val files = byBucket.values.flatten.toSeq.sorted
-    val zones = ZoneMaps.forVersion(spark, rel.dir, rel.v, files)
-    files.map { r =>
-      val fz = zones.getOrElse(r, Map.empty[String, ZoneMaps.Zone])
+      rel: GraftRelation, col: String, condO: Option[Expression]): Seq[FileEv] = {
+    val s = rel.snapshot
+    s.files.map { r =>
+      val fz = s.zonesOf(r)
       FileEv(r, ZoneMaps.rowCount(fz), if (col.isEmpty) None else fz.get(col),
-        dvBuckets.contains(fileBucket(r)),
+        s.ledgered(r),
         condO.map(GraftMetaAggregate.decideExpr(_, fz))
           .getOrElse(GraftMetaAggregate.FullyIn),
         allZones = fz)
@@ -121,11 +118,11 @@ object GraftTopK extends Rule[LogicalPlan] {
   /** Kept rel-paths for `ORDER BY a <dir> <nullOrd> LIMIT k`, or None
     * when nothing can be excluded / the shape refuses. */
   private def topKKeep(
-      spark: SparkSession, rel: GraftRelation, a: AttributeReference,
+      rel: GraftRelation, a: AttributeReference,
       descending: Boolean, nullsFirst: Boolean, k: Int,
       condO: Option[Expression]): Option[Seq[String]] = {
     val dt = a.dataType
-    val all = evidence(spark, rel, a.name, condO)
+    val all = evidence(rel, a.name, condO)
     // FullyOut files hold no qualifying row — out of the scan entirely
     // (deletes only shrink, so ledgered FullyOut files stay out too)
     val evs = all.filter(_.dec != GraftMetaAggregate.FullyOut)
@@ -224,10 +221,9 @@ object GraftTopK extends Rule[LogicalPlan] {
     * the true min, so exclusion only weakens; a stored max at-or-later
     * than the true max, so the threshold only widens). */
   private def topKKeepMulti(
-      spark: SparkSession, rel: GraftRelation,
-      keys: Seq[(AttributeReference, Boolean)], k: Int,
+      rel: GraftRelation, keys: Seq[(AttributeReference, Boolean)], k: Int,
       condO: Option[Expression]): Option[Seq[String]] = {
-    val all = evidence(spark, rel, keys.head._1.name, condO)
+    val all = evidence(rel, keys.head._1.name, condO)
     val evs = all.filter(_.dec != GraftMetaAggregate.FullyOut)
     if (evs.isEmpty)
       return if (all.nonEmpty) Some(Seq.empty) else None
@@ -292,9 +288,8 @@ object GraftTopK extends Rule[LogicalPlan] {
     * from such files alone (Boundary files hold an UNKNOWN number of
     * qualifying rows, so a quota they'd have to cover can't prune). */
   private def limitKeep(
-      spark: SparkSession, rel: GraftRelation, k: Int,
-      condO: Option[Expression]): Option[Seq[String]] = {
-    val evs = evidence(spark, rel, col = "", condO)
+      rel: GraftRelation, k: Int, condO: Option[Expression]): Option[Seq[String]] = {
+    val evs = evidence(rel, col = "", condO)
     var cum = 0L
     val kept = Seq.newBuilder[String]
     val it = evs.iterator
@@ -318,8 +313,7 @@ object GraftTopK extends Rule[LogicalPlan] {
   private def withSubset(
       plan: LogicalPlan, lr: LogicalRelation, rel: GraftRelation,
       kept: Seq[String]): LogicalPlan = {
-    val subset = lr.copy(relation =
-      rel.copy(version = rel.v, only = Some(kept.sorted)))
+    val subset = lr.copy(relation = rel.subset(kept.sorted))
     plan.transformUp {
       case l: LogicalRelation if l eq lr => subset
     }
@@ -407,8 +401,7 @@ object GraftTopK extends Rule[LogicalPlan] {
       val (condO, lr, rel) = target(child).get
       if (condO.exists(c => !GraftMetaAggregate.supportedExpr(c))) gl
       else Try {
-        val spark = SparkSession.active
-        val single = topKKeep(spark, rel, a, dir == Descending,
+        val single = topKKeep(rel, a, dir == Descending,
           nullOrd == NullsFirst, k, condO)
         // multi-key fold (round 16): compose zones over the LONGEST
         // all-attribute orderable sort-key prefix; both folds are
@@ -422,7 +415,7 @@ object GraftTopK extends Rule[LogicalPlan] {
           }.takeWhile(_.isDefined).flatten.toSeq
         val multi =
           if (keyPrefix.size >= 2)
-            topKKeepMulti(spark, rel, keyPrefix, k, condO)
+            topKKeepMulti(rel, keyPrefix, k, condO)
           else None
         val best = (single, multi) match {
           case (Some(x), Some(y)) => Some(if (y.size < x.size) y else x)
@@ -445,8 +438,7 @@ object GraftTopK extends Rule[LogicalPlan] {
       val (condO, lr, rel) = target(child).get
       if (condO.exists(c => !GraftMetaAggregate.supportedExpr(c))) gl
       else Try {
-        val spark = SparkSession.active
-        limitKeep(spark, rel, k, condO) match {
+        limitKeep(rel, k, condO) match {
           case Some(kept) =>
             gl.copy(child = ll.copy(child = withSubset(child, lr, rel, kept)))
           case None => gl

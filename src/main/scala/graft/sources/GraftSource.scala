@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
-import graft.pipeline.{FileBlooms, MergeTable, ZoneMaps}
+import graft.pipeline.{MergeTable, ZoneMaps}
 
 /** The `graft` Spark DataSource: [[MergeTable]]s as first-class
   * planner-visible tables, so plain `spark.read.format("graft")` /
@@ -22,6 +22,8 @@ import graft.pipeline.{FileBlooms, MergeTable, ZoneMaps}
   * and declares every filter unhandled so Spark re-applies the exact
   * semantics above the scan. Correctness therefore never depends on
   * the translation: an untranslatable predicate simply prunes less.
+  * Each relation reads one [[MergeTable.Snapshot]] of its version, so a
+  * query parses the manifest once and loads each sidecar at most once.
   *
   * Options: `path` (table root, required), `version` (time travel,
   * default latest); `changesFrom`/`changesTo` (+ `key`) switch the
@@ -213,32 +215,42 @@ private[sources] case class GraftChangesRelation(
   override def buildScan(): RDD[Row] = feed.rdd
 }
 
-/** Exposed pruning evidence of the most recent [[GraftRelation]] scan
-  * in this JVM: (files kept, files total). Plan-shape specs read it;
-  * nothing in the engine does. */
 object GraftRelation {
+  /** Exposed pruning evidence of the most recent [[GraftRelation]]
+    * scan in this JVM: (files kept, files total). Plan-shape specs read
+    * it; nothing in the engine does. */
   @volatile var lastPruned: (Int, Int) = (0, 0)
+
+  /** The whole of `version` (≤ 0: the latest, resolved here once) of
+    * the table at `dir`. */
+  private[graft] def apply(
+      sqlContext: SQLContext, dir: String, version: Int): GraftRelation =
+    GraftRelation(sqlContext, dir, version, None)(
+      MergeTable.snapshot(sqlContext.sparkSession, dir, version))
 }
 
-/** `only`: restrict the relation to a rel-path subset of the version's
-  * files — the seam [[graft.plans.GraftMetaAggregate]]'s hybrid
-  * filtered-count rewrite uses to scan ONLY the boundary files its
-  * metadata pass could not decide. None (the default, and everything
-  * user-facing) = the whole version. */
+/** A version of a graft table, read through its [[MergeTable.Snapshot]]
+  * — built once, where the version is resolved, so a concurrent commit
+  * never splits a query between two versions, and the sizing, the
+  * pruning, the plan rules ([[graft.plans.GraftTopK]],
+  * [[graft.plans.GraftMetaAggregate]]) and the scan all answer from the
+  * one parsed manifest and its sidecars. `only`: restrict the relation
+  * to a rel-path subset of the version's files ([[subset]]) — the seam
+  * the plan rules use to scan ONLY the files their metadata pass could
+  * not decide. None (everything user-facing) = the whole version. */
 private[graft] case class GraftRelation(
     sqlContext: SQLContext, dir: String, version: Int,
-    only: Option[Seq[String]] = None)
+    only: Option[Seq[String]])(private[graft] val snapshot: MergeTable.Snapshot)
   extends BaseRelation with PrunedFilteredScan {
 
   private val spark = sqlContext.sparkSession
-  // the version this relation reads — resolved ONCE at construction, so
-  // a concurrent commit never splits a query between two versions
-  // (planner rules like GraftMetaAggregate must answer from this exact
-  // version, not re-resolve "latest")
-  private[graft] val v =
-    if (version > 0) version else MergeTable.latestVersion(spark, dir)
+  private[graft] def v: Int = snapshot.version
 
-  override val schema: StructType = MergeTable.read(spark, dir, v).schema
+  /** This version restricted to `kept`, sharing the snapshot. */
+  private[graft] def subset(kept: Seq[String]): GraftRelation =
+    GraftRelation(sqlContext, dir, v, Some(kept))(snapshot)
+
+  override val schema: StructType = snapshot.schema
 
   // real table bytes from the manifest's files — the default is
   // "assume huge", which would bar a small graft dimension table from
@@ -250,8 +262,7 @@ private[graft] case class GraftRelation(
   // failing a query at plan time that might prune that file away.
   override lazy val sizeInBytes: Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val abs = MergeTable.fileIndex(spark, dir, v).values.flatten.toSeq
-      .map(rel => MergeTable.absPath(dir, rel))
+    val abs = snapshot.files.map(rel => MergeTable.absPath(dir, rel))
     val byDir = abs.groupBy(p => p.substring(0, p.lastIndexOf('/')))
     try {
       byDir.iterator.map { case (d, files) =>
@@ -302,38 +313,40 @@ private[graft] case class GraftRelation(
     def compare(a: String, b: String): Int = ZoneMaps.cpCompare(a, b)
   }
 
-  private def zoneNum(c: String, lo: BigDecimal, hi: BigDecimal): Set[String] =
-    MergeTable.prunedFiles(spark, dir, c, lo, hi, v)._1.toSet
-  private def zoneStr(c: String, lo: String, hi: String): Set[String] =
-    MergeTable.prunedFilesStr(spark, dir, c, lo, hi, v)._1.toSet
-  private def zoneNull(c: String, isNull: Boolean): Set[String] =
-    MergeTable.prunedFilesNull(spark, dir, c, isNull, v)._1.toSet
-  private def bloom(c: String, xs: Seq[Any]): Set[String] =
-    FileBlooms.prunedFilesEq(spark, dir, c, xs.distinct, v)._1.toSet
+  private type Keep = String => Boolean
+  private def zoneNum(c: String, lo: BigDecimal, hi: BigDecimal): Keep =
+    snapshot.keep(MergeTable.NumBound(c, lo, hi))
+  private def zoneStr(c: String, lo: String, hi: String): Keep =
+    snapshot.keep(MergeTable.StrBound(c, lo, hi))
+  private def zoneNull(c: String, isNull: Boolean): Keep =
+    snapshot.keep(MergeTable.NullBound(c, isNull))
+  private def bloom(c: String, xs: Seq[Any]): Keep =
+    snapshot.keep(MergeTable.EqBound(c, xs.distinct))
+  private def both(x: Keep, y: Keep): Keep = r => x(r) && y(r)
 
-  /** The kept-file evidence one pushed filter yields against the
-    * version's sidecars — None = no evidence (keep everything). The
-    * superset contract holds COMPOSITIONALLY: every leaf's set provably
-    * contains all files with a possibly-matching row, `And` intersects
-    * (a matching row satisfies both sides), `Or` unions per disjunct
-    * (a matching row satisfies one side, whose evidence keeps its
-    * file) — so disjunctive predicates prune too, instead of degrading
-    * to a full keep. `Not` yields no evidence (the complement of a
-    * superset proves nothing); Spark re-applies every filter exactly
-    * above the scan regardless. */
-  private def filesFor(f: Filter): Option[Set[String]] = f match {
+  /** The keep function one pushed filter yields against the version's
+    * sidecars — None = no evidence (keep everything). The superset
+    * contract holds COMPOSITIONALLY: every leaf keeps all files with a
+    * possibly-matching row, `And` keeps a file both sides keep (a
+    * matching row satisfies both), `Or` one either side keeps (a
+    * matching row satisfies one side, whose evidence keeps its file) —
+    * so disjunctive predicates prune too, instead of degrading to a
+    * full keep. `Not` yields no evidence (the complement of a superset
+    * proves nothing); Spark re-applies every filter exactly above the
+    * scan regardless. */
+  private def filesFor(f: Filter): Option[Keep] = f match {
     case EqualTo(c, x) if numCol(c) && toBig(x).isDefined =>
       val b = toBig(x).get
-      Some(zoneNum(c, b, b) intersect bloom(c, Seq(x)))
+      Some(both(zoneNum(c, b, b), bloom(c, Seq(x))))
     case EqualTo(c, x: String) if strCol(c) =>
-      Some(zoneStr(c, x, x) intersect bloom(c, Seq(x)))
+      Some(both(zoneStr(c, x, x), bloom(c, Seq(x))))
     case In(c, xs) if numCol(c) && xs.nonEmpty && xs.forall(toBig(_).isDefined) =>
       val bs = xs.toSeq.map(toBig(_).get)
-      Some(zoneNum(c, bs.min, bs.max) intersect bloom(c, xs.toSeq))
+      Some(both(zoneNum(c, bs.min, bs.max), bloom(c, xs.toSeq)))
     case In(c, xs) if strCol(c) && xs.nonEmpty && xs.forall(_.isInstanceOf[String]) =>
       val ss = xs.toSeq.map(_.asInstanceOf[String])
-      Some(zoneStr(c, ss.min(cpOrdering), ss.max(cpOrdering))
-        intersect bloom(c, xs.toSeq))
+      Some(both(zoneStr(c, ss.min(cpOrdering), ss.max(cpOrdering)),
+        bloom(c, xs.toSeq)))
     case GreaterThan(c, x) if numCol(c) && toBig(x).isDefined =>
       Some(zoneNum(c, toBig(x).get, MaxBig))
     case GreaterThanOrEqual(c, x) if numCol(c) && toBig(x).isDefined =>
@@ -356,11 +369,11 @@ private[graft] case class GraftRelation(
       Some(zoneNull(c, isNull = false))
     case And(a, b) =>
       (filesFor(a), filesFor(b)) match {
-        case (Some(x), Some(y)) => Some(x intersect y)
+        case (Some(x), Some(y)) => Some(both(x, y))
         case (x, y) => x.orElse(y) // half an AND still bounds the files
       }
     case Or(a, b) =>
-      for (x <- filesFor(a); y <- filesFor(b)) yield x union y
+      for (x <- filesFor(a); y <- filesFor(b)) yield (r: String) => x(r) || y(r)
     // Not / StringContains / ... — no pruning evidence; Spark applies
     // them exactly above the scan
     case _ => None
@@ -375,20 +388,14 @@ private[graft] case class GraftRelation(
 
   override def buildScan(
       requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val whole = MergeTable.fileIndex(spark, dir, v).values.flatten.toSeq.sorted
-    val all = only.fold(whole)(o => whole.filter(o.toSet))
-    val kept = filters.flatMap(filesFor).foldLeft(all.toSet)(_ intersect _)
+    val all = only.fold(snapshot.files)(o => snapshot.files.filter(o.toSet))
+    val keeps = filters.flatMap(filesFor)
+    val kept = all.filter(r => keeps.forall(_(r)))
     GraftRelation.lastPruned = (kept.size, all.size)
-    val base =
-      if (kept.isEmpty) MergeTable.read(spark, dir, v).limit(0)
-      else MergeTable.applyDeletes(spark, dir, v,
-        MergeTable.readRel(spark, dir, kept.toSeq.sorted))
     // push the translatable conjunction into the inner parquet scan
     // (row-group/footer skipping) — Spark still re-applies everything
     val pred = filters.flatMap(predOf(_).map(_._1)).reduceOption(_ && _)
-    val filtered = pred.fold(base)(base.filter)
-    val projected = filtered.select(requiredColumns.map(col).toSeq: _*)
-    projected.rdd
+    snapshot.scan(kept, pred).select(requiredColumns.map(col).toSeq: _*).rdd
   }
 
   /** Column form of a pushed filter, when one exists, paired with its

@@ -40,6 +40,10 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(classicOf(spark), plan)
 
+  /** `schema` with every field nullable, nested ones too — what a file
+    * source makes of the schema it is given. */
+  def asNullable(schema: StructType): StructType = schema.asNullable
+
   /** `df` as one leaf logical node (`LogicalRDD`, the leaf
     * `Dataset.checkpoint` returns, without the checkpoint) over the RDD
     * its executed plan produces. Building the RDD runs the plan's
